@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.SparkPlan
 
 /** Physical-plan audit: prints the formatted plan for the scale-critical
   * queries and greps for the properties a 100 TB deployment depends on —

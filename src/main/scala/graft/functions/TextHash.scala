@@ -14,8 +14,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * Every dedup/similarity/governance gate derives token and gram
   * signatures from three HOF expression shapes (rolling-131 char fold
   * per token, rolling-131 fold of a W-token window, per-function
-  * MinHash min) — see Dedup.sparkTokenHashes,
-  * Round11Ops.sparkPosTokenHashes and Round12Ops.sparkPosGrams.
+  * MinHash min) — see Dedup.sparkTokenHashes and
+  * Round11Ops.sparkPosTokenHashes; TextHashSpec keeps the HOF originals.
   * Spark's higher-order functions do not participate in whole-stage
   * codegen and evaluate the lambda per ELEMENT with boxed Longs and a
   * fresh intermediate array per step (`split(t, '')` alone allocates

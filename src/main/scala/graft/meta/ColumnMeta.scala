@@ -1,7 +1,7 @@
 package graft.meta
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
+import com.fasterxml.jackson.databind.node.ObjectNode
 import scala.jdk.CollectionConverters._
 
 /** Data-dictionary model: a JSON sidecar parallel to the physical schema,

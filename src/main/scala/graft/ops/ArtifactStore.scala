@@ -16,6 +16,23 @@ import java.nio.charset.StandardCharsets.UTF_8
   * 1000-executor deployment needs: executors and driver must agree on
   * artifact paths, and `/tmp` of the driver is not a shared location.
   *
+  * THE BUILD PROTOCOL. Every persisted artifact is built and trusted
+  * by one sequence, and operators state only the artifact's root, its
+  * `expect` marker content and its build body:
+  *   1. per call, re-check the source table's file signature
+  *      ([[tableFileSig]], metadata only) and the on-disk marker — an
+  *      in-JVM registry ([[Memo]]) trusts an entry only while both
+  *      still match, so an in-session table rewrite never serves stale;
+  *   2. on a miss, compare the marker with `expect`;
+  *   3. if it differs, take the cross-process build lock on the root;
+  *   4. check the marker again inside the lock (another process may
+  *      have just published the identical build);
+  *   5. build, then write the marker LAST, so a crashed half-build is
+  *      never trusted; count the build.
+  * Steps 2-5 are [[ensure]]; stream state that is wiped and re-folded
+  * instead of marker-gated follows the same lock and signature rules
+  * in [[SessionMemo]].
+  *
   * Reference scope: PalNilsson/ask-duckdb persists nothing (its DuckDB
   * file IS its storage, query_llm.py:441-455); the artifact tier exists
   * for the 100 TB serving mandate.
@@ -54,6 +71,32 @@ object ArtifactStore {
 
   /** Resolve an artifact root under [[scratchBase]]. */
   def root(name: String): String = new Path(scratchBase, name).toString
+
+  /** Collision-resistant key for artifact roots derived from a data
+    * dir: first 16 hex chars of SHA-256(dir). A 32-bit String.hashCode
+    * can collide across two data dirs, which would make their corpus
+    * markers mismatch on every alternation and silently rebuild (and
+    * overwrite) each other's artifacts.
+    */
+  private[graft] def dirDigest(dir: String): String = {
+    val d = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(dir.getBytes(UTF_8))
+    d.take(8).map(b => f"${b & 0xff}%02x").mkString
+  }
+
+  /** Deterministic scratch root `name`, wiped clean — the re-runnable
+    * alternative to createTempDirectory-per-invocation (which
+    * accumulated O(corpus) parquet across bench sweeps). The root's
+    * `_build.lock` survives the wipe, so a [[SessionMemo]] build that
+    * wipes the root it holds the lock on stays exclusive.
+    */
+  private[ops] def scratchDir(name: String): String = {
+    val p = root(name)
+    listEntries(p).filterNot(_ == LockFile)
+      .foreach(e => deleteRecursive(s"$p/$e"))
+    mkdirs(p)
+    p
+  }
 
   def exists(path: String): Boolean = {
     val p = new Path(path)
@@ -270,23 +313,21 @@ object ArtifactStore {
     stale
   }
 
-  def markerPath(root: String, file: String = "_meta.json"): String =
+  private val MarkerFile = "_meta.json"
+  private val LockFile = "_build.lock"
+
+  def markerPath(root: String, file: String = MarkerFile): String =
     new Path(root, file).toString
 
-  /** Does `root`'s marker exist and carry exactly `expect`? The
-    * per-call staleness probe every artifact memo runs.
-    */
-  def markerOk(root: String, expect: String,
-      file: String = "_meta.json"): Boolean = {
+  /** Does `root`'s marker exist and carry exactly `expect`? */
+  private[ops] def markerOk(root: String, expect: String,
+      file: String = MarkerFile): Boolean = {
     val mk = markerPath(root, file)
     exists(mk) && readString(mk) == expect
   }
 
-  /** Publish `root`'s marker — call LAST in a build, so a crashed
-    * half-build is never trusted.
-    */
-  def writeMarker(root: String, body: String,
-      file: String = "_meta.json"): Unit =
+  private[ops] def writeMarker(root: String, body: String,
+      file: String = MarkerFile): Unit =
     writeString(markerPath(root, file), body)
 
   /** Cheap per-call table-change sentinel: the RECURSIVE (relative
@@ -316,19 +357,16 @@ object ArtifactStore {
   private val monitors =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
-  /** Run `body` (an artifact build + marker publish) under a
-    * CROSS-PROCESS exclusive lock on `root` (round-13 advice: two JVMs
-    * sharing the scratch tree — tools/full_check.sh next to an sbt
-    * test run — that both observe a stale marker must not interleave
-    * `overwrite` writes into the same parquet dirs). Local roots take
-    * a `FileChannel` lock on `<root>/_build.lock`; non-local roots
-    * fall back to the in-JVM monitor only — cluster stores coordinate
-    * re-builds upstream (one writer job), and the marker-written-last
-    * protocol still rejects any torn build. Callers re-check the
-    * marker INSIDE `body`: the other process may have just finished
-    * the identical build.
+  /** Run `body` under a CROSS-PROCESS exclusive lock on `root`: two
+    * JVMs sharing the scratch tree that both observe a stale marker
+    * must not interleave `overwrite` writes into the same parquet
+    * dirs. Local roots take a `FileChannel` lock on
+    * `<root>/_build.lock`; non-local roots fall back to the in-JVM
+    * monitor only — cluster stores coordinate re-builds upstream (one
+    * writer job), and the marker-written-last step still rejects any
+    * torn build.
     */
-  def withBuildLock[T](root: String)(body: => T): T = {
+  private[ops] def withBuildLock[T](root: String)(body: => T): T = {
     if (held.get().contains(root)) return body
     val mon = monitors.computeIfAbsent(root, _ => new Object)
     mon.synchronized {
@@ -340,7 +378,7 @@ object ArtifactStore {
           val dir = java.nio.file.Paths.get(uri.getPath)
           java.nio.file.Files.createDirectories(dir)
           val ch = java.nio.channels.FileChannel.open(
-            dir.resolve("_build.lock"),
+            dir.resolve(LockFile),
             java.nio.file.StandardOpenOption.CREATE,
             java.nio.file.StandardOpenOption.WRITE)
           try {
@@ -349,6 +387,83 @@ object ArtifactStore {
           } finally ch.close()
         } else body
       } finally held.set(held.get() - root)
+    }
+  }
+
+  /** Steps 2-5 of the build protocol: unless `root`'s marker already
+    * carries `expect`, take the cross-process lock, check again (the
+    * other process may have just published the identical build), run
+    * `build`, and publish the marker LAST. Returns whether this call
+    * built.
+    */
+  def ensure(root: String, expect: String,
+      markerFile: String = MarkerFile)(build: => Unit): Boolean =
+    !markerOk(root, expect, markerFile) && withBuildLock(root) {
+      !markerOk(root, expect, markerFile) && {
+        build
+        writeMarker(root, expect, markerFile)
+        true
+      }
+    }
+
+  /** Step 1 of the build protocol: one in-JVM artifact registry. An
+    * entry (root, expect, table signature, value) is trusted only while
+    * the caller's table signature AND the on-disk marker still match;
+    * otherwise `resolve` recomputes (root, expect, value) and
+    * [[ensure]] runs `build` if the marker disagrees. One monitor per
+    * instance. `builds` counts the builds this registry ran; `drop()`
+    * forgets the entries (a "new session": files and markers survive).
+    * `markerOf` names the marker file per key. `V` is a value computed
+    * with the root and kept with it (`Unit` for most artifacts).
+    */
+  final class Memo[K, V](markerOf: K => String = (_: K) => MarkerFile) {
+    private val reg = scala.collection.mutable.Map.empty[K,
+      (String, String, String, V)]
+    private val n = new java.util.concurrent.atomic.AtomicInteger
+
+    def builds: Int = n.get
+    def drop(): Unit = synchronized(reg.clear())
+
+    def apply(key: K, sig: => String)(resolve: => (String, String, V))(
+        build: (String, V) => Unit): (String, V) = synchronized {
+      val mk = markerOf(key)
+      val s0 = sig
+      reg.get(key) match {
+        case Some((root, expect, `s0`, v)) if markerOk(root, expect, mk) =>
+          (root, v)
+        case _ =>
+          val (root, expect, v) = resolve
+          if (ensure(root, expect, mk)(build(root, v))) n.incrementAndGet()
+          reg(key) = (root, expect, s0, v)
+          (root, v)
+      }
+    }
+  }
+
+  /** The build protocol for STREAM STATE: a wipe-and-refold root that
+    * carries no marker, rebuilt once per (session, data dir) while
+    * `table`'s file signature is unchanged. The build runs under the
+    * cross-process lock on `root` with the signature re-checked inside
+    * it, so two sessions (or JVMs) never wipe the shared root
+    * concurrently.
+    */
+  final class SessionMemo(table: String) {
+    private val bySession = java.util.Collections.synchronizedMap(
+      new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
+        java.util.concurrent.ConcurrentHashMap[String, String]]())
+
+    def apply(s: org.apache.spark.sql.SparkSession, dir: String,
+        root: String)(build: => Unit): String = {
+      val done = bySession.computeIfAbsent(s,
+        _ => new java.util.concurrent.ConcurrentHashMap[String, String]())
+      val sig = tableFileSig(dir, table)
+      if (done.get(dir) != sig) withBuildLock(root) {
+        if (done.get(dir) != sig) {
+          build
+          done.put(dir, sig)
+        }
+      }
+      root
     }
   }
 }

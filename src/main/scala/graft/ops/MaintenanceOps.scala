@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -20,12 +20,6 @@ import graft.Tables
   * centroid id.
   */
 object MaintenanceOps {
-
-  /** md5-char fold mod 1e9+7 (the q198/q208 hashing kernel). */
-  private def sparkFold(u: String): String =
-    s"aggregate(transform(filter(split(md5($u), ''), c -> c != ''), " +
-      "c -> CAST(ascii(c) AS BIGINT)), CAST(0 AS BIGINT), " +
-      "(a, b) -> (a * 31 + b) % 1000000007)"
 
   private def duckFold(u: String): String =
     s"list_reduce(list_prepend(CAST(0 AS BIGINT), " +

@@ -122,12 +122,6 @@ object Pq {
     s"adc_codes(qs, cbs, array(${(0 until M).map(m => s"c$m")
       .mkString(", ")}))"
 
-  /** Exact integer scores only (no PQ): (vec_id, exact). */
-  private def exactScore(in: DataFrame, q0: DataFrame): DataFrame =
-    in.crossJoin(broadcast(q0))
-      .withColumn("sv", expr(KMeans.scaleExpr("embedding")))
-      .select(col("vec_id"), expr(intDot("sv", "qs")).as("exact"))
-
   // ---------------- shared oracle builders ---------------------------
 
   /** The M side-by-side per-subspace Lloyd chains. */

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -52,9 +52,6 @@ object Round10More {
     s"list_reduce(list_prepend(CAST(7 AS BIGINT), " +
       s"list_transform(string_split($t, ''), " +
       s"c -> CAST(unicode(c) AS BIGINT))), (a, b) -> (a * 131 + b) % $M)"
-
-  private[ops] def rmTree(p: String): Unit =
-    ArtifactStore.deleteRecursive(p)
 
   /** The CDC chunk oracle CTE chain over `documents`, ending in
     * `chunks(doc_id, chunk, chash, n_tokens)` — the DuckDB mirror of
@@ -162,10 +159,8 @@ object Round10More {
          |FROM perdoc
          |GROUP BY bucket
          |ORDER BY bucket""".stripMargin) { (s, dir) =>
-      val root = ArtifactStore.root(
-        s"graft_backfill_${VecIndex.dirDigest(dir)}")
-      rmTree(root)
-      ArtifactStore.mkdirs(root)
+      val root = ArtifactStore.scratchDir(
+        s"graft_backfill_${ArtifactStore.dirDigest(dir)}")
       val data = s"$root/data"
       def transform() = Tables.table(s, dir, "documents")
         .select(col("doc_id"), (col("doc_id") % NBUCKETS).as("bucket"),

@@ -264,8 +264,8 @@ object Round11Extra {
          |GROUP BY source
          |ORDER BY source""".stripMargin) { (s, dir) =>
       val store = Round11More.buildDedupStore(s, dir)
-      val compacted = Round6Ops.scratchDir(
-        s"graft_dedupstore_c_${VecIndex.dirDigest(dir)}")
+      val compacted = ArtifactStore.scratchDir(
+        s"graft_dedupstore_c_${ArtifactStore.dirDigest(dir)}")
       // one shuffle keyed on the bucket → exactly one file per bucket
       s.read.parquet(store)
         .withColumn("hb", (col("doc_id") % NBKT).cast("int"))

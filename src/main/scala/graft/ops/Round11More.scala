@@ -79,7 +79,7 @@ object Round11More {
     * spec's replay test).
     */
   private[ops] def dedupStoreName(dir: String): String =
-    s"graft_dedupstore_${VecIndex.dirDigest(dir)}"
+    s"graft_dedupstore_${ArtifactStore.dirDigest(dir)}"
 
   /** Build the 4 deterministic arrival waves as one parquet file each
     * (w0..w3), with strictly increasing modification times so the file
@@ -102,33 +102,29 @@ object Round11More {
       val dst = f"$src/w$w%02d.parquet"
       ArtifactStore.move(s"$stage/$part", dst)
       ArtifactStore.setMtime(dst, 1000000000000L + w * 60000L)
-      Round10More.rmTree(stage)
+      ArtifactStore.deleteRecursive(stage)
     }
   }
 
-  private val builtStores = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, String]]())
+  private val dedupStores = new ArtifactStore.SessionMemo("documents")
 
   /** Run the full wave-streamed ingest for `dir` and return the
     * persisted store path — q268's pipeline, shared with the
-    * compaction gate (q274). Built ONCE per (session, dir), the
-    * KMeans.codebook train-once discipline: the suite's second
-    * consumer serves from the artifact instead of re-streaming the
-    * corpus (the replay-idempotence the spec proves makes reuse safe —
-    * nothing a re-run appends could change the content).
+    * compaction gate (q274). Built ONCE per (session, dir) while the
+    * documents are unchanged, the KMeans.codebook train-once
+    * discipline: the suite's second consumer serves from the artifact
+    * instead of re-streaming the corpus (the replay-idempotence the
+    * spec proves makes reuse safe — nothing a re-run appends could
+    * change the content).
     */
   private[ops] def buildDedupStore(s: SparkSession, dir: String): String =
-    builtStores
-      .computeIfAbsent(s,
-        _ => new java.util.concurrent.ConcurrentHashMap[String, String]())
-      .computeIfAbsent(dir, _ => buildDedupStoreFresh(s, dir))
+    dedupStores(s, dir, ArtifactStore.root(dedupStoreName(dir)))(
+      buildDedupStoreFresh(s, dir))
 
-  private def buildDedupStoreFresh(
-      s: SparkSession, dir: String): String = {
-    val src = Round6Ops.scratchDir(
-      s"graft_dedupwaves_${VecIndex.dirDigest(dir)}")
-    val store = Round6Ops.scratchDir(dedupStoreName(dir))
+  private def buildDedupStoreFresh(s: SparkSession, dir: String): Unit = {
+    val src = ArtifactStore.scratchDir(
+      s"graft_dedupwaves_${ArtifactStore.dirDigest(dir)}")
+    val store = ArtifactStore.scratchDir(dedupStoreName(dir))
     writeWaves(s, dir, src)
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("doc_id",
@@ -148,7 +144,6 @@ object Round11More {
       }
       .start()
     Round6Ops.drainTo(q, store)
-    store
   }
 
   val queries: Seq[Q] = Seq(
@@ -252,10 +247,10 @@ object Round11More {
         .select(col("doc_id"), col("source"),
           size(split(col("text"), " ")).cast("bigint").as("ntk"),
           md5(col("text")).as("h"))
-      val histDir = Round6Ops.scratchDir(
-        s"graft_cardhist_${VecIndex.dirDigest(dir)}")
-      val fpsDir = Round6Ops.scratchDir(
-        s"graft_cardfps_${VecIndex.dirDigest(dir)}")
+      val histDir = ArtifactStore.scratchDir(
+        s"graft_cardhist_${ArtifactStore.dirDigest(dir)}")
+      val fpsDir = ArtifactStore.scratchDir(
+        s"graft_cardfps_${ArtifactStore.dirDigest(dir)}")
       val base = d.filter(col("doc_id") % DELTA_MOD =!= DELTA_RES)
       val delta = d.filter(col("doc_id") % DELTA_MOD === DELTA_RES)
       // historical build (runs once; merges below never rescan base)

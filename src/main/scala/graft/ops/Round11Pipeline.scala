@@ -132,10 +132,8 @@ object Round11Pipeline {
          |  n_rows AS manifest_rows, fpsum AS manifest_fpsum
          |FROM per
          |ORDER BY shard""".stripMargin) { (s, dir) =>
-      val root = ArtifactStore.root(
-        s"graft_release_${VecIndex.dirDigest(dir)}")
-      Round10More.rmTree(root)
-      ArtifactStore.mkdirs(root)
+      val root = ArtifactStore.scratchDir(
+        s"graft_release_${ArtifactStore.dirDigest(dir)}")
       val data = s"$root/data"
       val fp = Tables.table(s, dir, "documents")
         .select(col("doc_id"), md5(col("text")).as("h"),

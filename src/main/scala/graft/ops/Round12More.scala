@@ -31,7 +31,6 @@ import graft.functions.TextHash
   */
 object Round12More {
 
-  private val M = 1000000007L
   private val WAVES = 4
   private[ops] val TMIX = 32L // q280: temperature-mix target (docs)
 
@@ -59,7 +58,7 @@ object Round12More {
       val dst = f"$src/w$w%02d.parquet"
       ArtifactStore.move(s"$stage/$part", dst)
       ArtifactStore.setMtime(dst, 1000000000000L + w * 60000L)
-      Round10More.rmTree(stage)
+      ArtifactStore.deleteRecursive(stage)
     }
   }
 
@@ -108,25 +107,23 @@ object Round12More {
     ()
   }
 
-  private val builtCards = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, String]]())
+  private val cardStates = new ArtifactStore.SessionMemo("documents")
 
   /** Run the card-stream fold for `dir` and return the state root —
-    * built once per (session, dir), the buildDedupStore discipline
-    * (replay idempotence, proven in the spec, makes reuse safe).
+    * built once per (session, dir) while the documents are unchanged,
+    * the buildDedupStore discipline (replay idempotence, proven in the
+    * spec, makes reuse safe).
     */
   private[ops] def buildCardState(s: SparkSession, dir: String): String =
-    builtCards
-      .computeIfAbsent(s,
-        _ => new java.util.concurrent.ConcurrentHashMap[String, String]())
-      .computeIfAbsent(dir, _ => buildCardStateFresh(s, dir))
+    cardStates(s, dir, ArtifactStore.root(
+      s"graft_cardstate_${ArtifactStore.dirDigest(dir)}"))(
+      buildCardStateFresh(s, dir))
 
-  private def buildCardStateFresh(s: SparkSession, dir: String): String = {
-    val src = Round6Ops.scratchDir(
-      s"graft_cardwaves_${VecIndex.dirDigest(dir)}")
-    val root = Round6Ops.scratchDir(
-      s"graft_cardstate_${VecIndex.dirDigest(dir)}")
+  private def buildCardStateFresh(s: SparkSession, dir: String): Unit = {
+    val src = ArtifactStore.scratchDir(
+      s"graft_cardwaves_${ArtifactStore.dirDigest(dir)}")
+    val root = ArtifactStore.scratchDir(
+      s"graft_cardstate_${ArtifactStore.dirDigest(dir)}")
     writeCardWaves(s, dir, src)
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("doc_id",
@@ -145,7 +142,6 @@ object Round12More {
       }
       .start()
     Round6Ops.drainTo(q, s"$root/hist")
-    root
   }
 
   val queries: Seq[Q] = Seq(

@@ -33,15 +33,6 @@ object Round12Ops {
   private[ops] val SPAN_W = 20 // ExactSubstr grain (tokens)
   private val POSMUL = 1048576L // 2^20: (doc_id, pos) -> one BIGINT key
 
-  /** Positional (non-distinct) W-token gram hashes over a token-hash
-    * array column `th` — [[Round11Ops.sparkShingles]] WITHOUT the
-    * distinct, so every occurrence keeps its position.
-    */
-  private def sparkPosGrams(w: Int, th: String = "th"): String =
-    s"transform(sequence(0, size($th) - $w), " +
-      s"i -> aggregate(slice($th, i + 1, $w), CAST(0 AS BIGINT), " +
-      s"(a, b) -> (a * 131 + b) % $M))"
-
   /** Docs with toks + positional token hashes (q277/q284's front;
     * codegen kernel — TextHashSpec pins HOF equality).
     */
@@ -276,17 +267,8 @@ object Round12Ops {
 
   // ---------------- persisted KMV sketch artifact ----------------
 
-  // dir -> (artifact root, content marker, docs file signature);
-  // per-call sig + marker re-validation as everywhere since round 12
-  private val built = scala.collection.mutable
-    .Map.empty[String, (String, String, String)]
-  private[ops] var sketchBuilds = 0 // spec hook: counts actual builds
-
-  /** Test hook: forget the in-JVM registry (simulates a new session —
-    * the on-disk artifact and marker survive).
-    */
-  private[ops] def dropSketchMemo(): Unit =
-    built.synchronized { built.clear() }
+  // dir -> artifact root of the per-source KMV sketches
+  private[ops] val builtSketch = new ArtifactStore.Memo[String, Unit]
 
   /** Cheap corpus identity for the documents table: row count + an
     * order-independent fold of md5(doc_id|text) — one scan, any row
@@ -307,35 +289,19 @@ object Round12Ops {
   /** Artifact root for the per-source KMV sketches of `dir`'s corpus.
     * A fresh marker means a previous session built the sketch from the
     * identical corpus + k — this session serves from the files without
-    * rebuilding. The marker is written LAST, so a crashed half-build is
-    * never trusted.
+    * rebuilding.
     */
-  private[ops] def sketchArtifact(s: SparkSession, dir: String): String =
-    built.synchronized {
-      val sig = VecIndex.tableFileSig(dir, "documents")
-      val hit = built.get(dir).exists { case (root, expect, s0) =>
-        s0 == sig && ArtifactStore.markerOk(root, expect)
-      }
-      if (!hit) {
-        val p = ArtifactStore.root(
-          s"graft_kmvsk_${VecIndex.dirDigest(dir)}")
-        val docs = Tables.table(s, dir, "documents")
-        val expect = docsMarker(docs)
-        if (!ArtifactStore.markerOk(p, expect))
-          ArtifactStore.withBuildLock(p) {
-            if (!ArtifactStore.markerOk(p, expect)) {
-              val wsrc =
-                Window.partitionBy(col("source")).orderBy(col("b"))
-              Round11Extra.bigrams(docs)
-                .withColumn("rn", row_number().over(wsrc))
-                .filter(col("rn") <= Round11Extra.KMV_K)
-                .write.mode("overwrite").parquet(s"$p/sketch")
-              ArtifactStore.writeMarker(p, expect)
-              sketchBuilds += 1
-            }
-          }
-        built(dir) = (p, expect, sig)
-      }
-      built(dir)._1
-    }
+  private[ops] def sketchArtifact(s: SparkSession, dir: String): String = {
+    def docs = Tables.table(s, dir, "documents")
+    builtSketch(dir, ArtifactStore.tableFileSig(dir, "documents"))(
+      (ArtifactStore.root(s"graft_kmvsk_${ArtifactStore.dirDigest(dir)}"),
+        docsMarker(docs), ())) { (p, _) =>
+      val wsrc =
+        Window.partitionBy(col("source")).orderBy(col("b"))
+      Round11Extra.bigrams(docs)
+        .withColumn("rn", row_number().over(wsrc))
+        .filter(col("rn") <= Round11Extra.KMV_K)
+        .write.mode("overwrite").parquet(s"$p/sketch")
+    }._1
+  }
 }

@@ -63,7 +63,7 @@ object Round12State {
       val dst = f"$src/w$w%02d.parquet"
       ArtifactStore.move(s"$stage/$part", dst)
       ArtifactStore.setMtime(dst, 1000000000000L + w * 60000L)
-      Round10More.rmTree(stage)
+      ArtifactStore.deleteRecursive(stage)
     }
   }
 
@@ -105,54 +105,23 @@ object Round12State {
     ()
   }
 
-  // session -> (dir -> (state root, docs file signature)). The file
-  // signature re-validates on every call, so an in-session rewrite of
-  // documents under `dir` rebuilds the stream state instead of serving
-  // stale (round-12 advice: buildDeconState had no content check).
-  private val builtDecon = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, (String, String)]]())
-
-  // JVM-GLOBAL build locks keyed by the dir digest: the scratch dirs
-  // under /tmp are shared across sessions, so two sessions in one JVM
-  // must never wipe-and-rebuild the same state concurrently (round-12
-  // advice). Serialized rebuild is wasteful but correct — the state is
-  // deterministic in the corpus.
-  private val deconLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
+  private val deconStates = new ArtifactStore.SessionMemo("documents")
 
   /** Run the decontamination stream for `dir` and return the state
     * root — built once per (session, dir) while the corpus under `dir`
     * is unchanged; replay idempotence is proven in the spec, which
     * makes reuse safe.
     */
-  private[ops] def buildDeconState(s: SparkSession, dir: String): String = {
-    val perSession = builtDecon.computeIfAbsent(s,
-      _ => new java.util.concurrent.ConcurrentHashMap[String,
-        (String, String)]())
-    val sig = VecIndex.tableFileSig(dir, "documents")
-    val cur = perSession.get(dir)
-    if (cur != null && cur._2 == sig) cur._1
-    else {
-      val lock = deconLocks
-        .computeIfAbsent(VecIndex.dirDigest(dir), _ => new Object)
-      // cross-process build lock on the deterministic state root: two
-      // JVMs sharing the scratch tree must not interleave the delete/
-      // rebuild of the wave + state dirs (round-13 advice)
-      val root = lock.synchronized(ArtifactStore.withBuildLock(
-        ArtifactStore.root(
-          s"graft_deconstate_${VecIndex.dirDigest(dir)}"))(
-        buildDeconStateFresh(s, dir)))
-      perSession.put(dir, (root, sig))
-      root
-    }
-  }
+  private[ops] def buildDeconState(s: SparkSession, dir: String): String =
+    deconStates(s, dir, ArtifactStore.root(
+      s"graft_deconstate_${ArtifactStore.dirDigest(dir)}"))(
+      buildDeconStateFresh(s, dir))
 
-  private def buildDeconStateFresh(s: SparkSession, dir: String): String = {
-    val src = Round6Ops.scratchDir(
-      s"graft_deconwaves_${VecIndex.dirDigest(dir)}")
-    val root = Round6Ops.scratchDir(
-      s"graft_deconstate_${VecIndex.dirDigest(dir)}")
+  private def buildDeconStateFresh(s: SparkSession, dir: String): Unit = {
+    val src = ArtifactStore.scratchDir(
+      s"graft_deconwaves_${ArtifactStore.dirDigest(dir)}")
+    val root = ArtifactStore.scratchDir(
+      s"graft_deconstate_${ArtifactStore.dirDigest(dir)}")
     val n = math.max(Tables.table(s, dir, "documents").count(), 1L)
     val thr = math.min(Round11Ops.BMOD,
       (Round11Ops.BMOD * Round11Ops.BENCH_N + n - 1) / n)
@@ -183,64 +152,35 @@ object Round12State {
       }
       .start()
     Round6Ops.drainTo(q, s"$root/docs")
-    root
   }
 
   // ---------------- q289: the band-signature frames ----------------
 
-  // dir -> (store root, content marker, docs file signature): q289's
-  // persisted band store, built once per corpus (marker written LAST)
-  // and re-validated per call like ngramArtifact.
-  private val builtBand =
-    scala.collection.mutable.Map.empty[String, (String, String, String)]
-  private[ops] var bandBuilds = 0 // spec hook: counts actual builds
-
-  /** Test hook: forget the in-JVM registry (the on-disk store and
-    * marker survive — a "new session").
-    */
-  private[ops] def dropBandMemo(): Unit =
-    builtBand.synchronized { builtBand.clear() }
+  // dir -> store root of q289's persisted band store
+  private[ops] val builtBand = new ArtifactStore.Memo[String, Unit]
 
   /** The persisted MinHash band STORE for `dir`: sg/ (per-doc distinct
     * shingle arrays, the verification side), base/ and delta/ (the
     * b2r4 band-signature rows of the base slice and the delta wave).
-    * Built ONCE per corpus behind a docsMarker written last; every
-    * q289 serve reads these files only. At 100 TB the store is the
+    * Built ONCE per corpus behind a docsMarker; every q289 serve reads
+    * these files only. At 100 TB the store is the
     * artifact a dedup service keeps warm; a delta ingest appends its
     * band rows and the audit below reads the merged store.
     */
   private[ops] def bandStore(s: SparkSession, dir: String): String =
-    builtBand.synchronized {
-      val sig = VecIndex.tableFileSig(dir, "documents")
-      val p = ArtifactStore.root(
-        s"graft_bandstore_${VecIndex.dirDigest(dir)}")
-      val hit = builtBand.get(dir).exists { case (_, expect, s0) =>
-        s0 == sig && ArtifactStore.markerOk(p, expect)
-      }
-      if (!hit) {
-        val expect =
-          Round12Ops.docsMarker(Tables.table(s, dir, "documents"))
-        if (!ArtifactStore.markerOk(p, expect))
-          ArtifactStore.withBuildLock(p) {
-            // re-check under the cross-process lock (round-13 advice)
-            if (!ArtifactStore.markerOk(p, expect)) {
-              val sg = shingleFrame(s, dir).localCheckpoint(true)
-              sg.write.mode("overwrite").parquet(s"$p/sg")
-              val rows = bandRows(sg)
-              val isDelta = col("doc_id") % DELTA_MOD === DELTA_RES
-              rows.filter(!isDelta)
-                .write.mode("overwrite").parquet(s"$p/base")
-              rows.filter(isDelta)
-                .write.mode("overwrite").parquet(s"$p/delta")
-              sg.unpersist()
-              ArtifactStore.writeMarker(p, expect)
-              bandBuilds += 1
-            }
-          }
-        builtBand(dir) = (p, expect, sig)
-      }
-      p
-    }
+    builtBand(dir, ArtifactStore.tableFileSig(dir, "documents"))(
+      (ArtifactStore.root(s"graft_bandstore_${ArtifactStore.dirDigest(dir)}"),
+        Round12Ops.docsMarker(Tables.table(s, dir, "documents")), ())) { (p, _) =>
+      val sg = shingleFrame(s, dir).localCheckpoint(true)
+      sg.write.mode("overwrite").parquet(s"$p/sg")
+      val rows = bandRows(sg)
+      val isDelta = col("doc_id") % DELTA_MOD === DELTA_RES
+      rows.filter(!isDelta)
+        .write.mode("overwrite").parquet(s"$p/base")
+      rows.filter(isDelta)
+        .write.mode("overwrite").parquet(s"$p/delta")
+      sg.unpersist()
+    }._1
 
   /** (doc_id, sg): distinct 3-token shingle hashes (q265's signature
     * front — unigram minhashes degenerate on this template corpus).

@@ -36,12 +36,6 @@ object Round14Ops {
 
   private val M = 1000000007L
 
-  /** md5-char fold mod 1e9+7 (the q198/q208/q254 fingerprint kernel). */
-  private def sparkFold(u: String): String =
-    s"aggregate(transform(filter(split(md5($u), ''), c -> c != ''), " +
-      "c -> CAST(ascii(c) AS BIGINT)), CAST(0 AS BIGINT), " +
-      "(a, b) -> (a * 31 + b) % 1000000007)"
-
   private def duckFold(u: String): String =
     s"list_reduce(list_prepend(CAST(0 AS BIGINT), " +
       s"list_transform(string_split(md5($u), ''), " +

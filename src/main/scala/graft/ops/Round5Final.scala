@@ -21,15 +21,6 @@ import graft.Tables
   */
 object Round5Final {
 
-  /** Integer fold of md5($u)'s hex chars mod 1e9+7 — the deterministic,
-    * partial-agg-friendly "hash a value to a bucket" kernel both
-    * engines express identically (q198's row-fingerprint pattern).
-    */
-  private def sparkFold(u: String): String =
-    s"aggregate(transform(filter(split(md5($u), ''), c -> c != ''), " +
-      "c -> CAST(ascii(c) AS BIGINT)), CAST(0 AS BIGINT), " +
-      "(a, b) -> (a * 31 + b) % 1000000007)"
-
   private def duckFold(u: String): String =
     s"list_reduce(list_prepend(CAST(0 AS BIGINT), " +
       s"list_transform(string_split(md5($u), ''), " +

@@ -582,8 +582,8 @@ object Round6Ops {
       val qStream = embStream(s, dir).filter(col("vec_id") < QN)
       // deterministic per-dir sink root, WIPED at query start — repeated
       // executions never accumulate artifacts (round-6 advice)
-      val out = scratchDir(
-        s"graft_streamann_${VecIndex.dirDigest(dir)}")
+      val out = ArtifactStore.scratchDir(
+        s"graft_streamann_${ArtifactStore.dirDigest(dir)}")
       val q = qStream.writeStream.outputMode("append")
         .foreachBatch(serveBatch(lists, coarse, out) _)
         .start()
@@ -701,13 +701,16 @@ object Round6Ops {
     * artifact builds). The fix is to re-process until the sink holds
     * at least one batch dir (bounded — the gates' query streams are
     * never empty), letting a later trigger pick the discovery up.
+    * Bookkeeping entries (`_`/`.`-prefixed, e.g. the `_build.lock` a
+    * locked stream-state root keeps) are not batches.
     */
   private[graft] def drainTo(
       q: org.apache.spark.sql.streaming.StreamingQuery,
       out: String): Unit = {
     try {
       q.processAllAvailable()
-      def empty = ArtifactStore.listEntries(out).isEmpty
+      def empty = ArtifactStore.listEntries(out)
+        .forall(n => n.startsWith("_") || n.startsWith("."))
       var tries = 0
       while (tries < 40 && empty) {
         Thread.sleep(250); q.processAllAvailable(); tries += 1
@@ -718,17 +721,6 @@ object Round6Ops {
             " — file-source discovery race persisted past 10s (or the" +
             " source is genuinely empty, which these gates never are)")
     } finally q.stop()
-  }
-
-  /** Deterministic scratch dir under java.io.tmpdir, wiped clean — the
-    * re-runnable alternative to createTempDirectory-per-invocation
-    * (which accumulated O(corpus) parquet across bench sweeps).
-    */
-  private[ops] def scratchDir(name: String): String = {
-    val p = ArtifactStore.root(name)
-    ArtifactStore.deleteRecursive(p)
-    ArtifactStore.mkdirs(p)
-    p
   }
 
   /** Streaming source over the embeddings parquet (file-stream; the
@@ -751,7 +743,7 @@ object Round6Ops {
       else {
         val streamDir = java.nio.file.Paths.get(
           sys.props("java.io.tmpdir"),
-          s"graft_stream_emb_${VecIndex.dirDigest(dir)}")
+          s"graft_stream_emb_${ArtifactStore.dirDigest(dir)}")
         java.nio.file.Files.createDirectories(streamDir)
         val link = streamDir.resolve("embeddings.parquet")
         if (java.nio.file.Files.exists(link,

@@ -295,13 +295,13 @@ object Round7More {
       // union must still equal the full re-encode — encoding is
       // pointwise, so the split cannot show through) ----
       val newb0 = e.filter(col("vec_id") % 10 >= 8)
-      val src = Round6Ops.scratchDir(
-        s"graft_streamingest_src_${VecIndex.dirDigest(dir)}")
+      val src = ArtifactStore.scratchDir(
+        s"graft_streamingest_src_${ArtifactStore.dirDigest(dir)}")
       newb0.repartition(2).write.mode("overwrite").parquet(src)
       val newStream = s.readStream.schema(newb0.schema)
         .option("maxFilesPerTrigger", 1).parquet(src)
-      val out = Round6Ops.scratchDir(
-        s"graft_streamingest_${VecIndex.dirDigest(dir)}")
+      val out = ArtifactStore.scratchDir(
+        s"graft_streamingest_${ArtifactStore.dirDigest(dir)}")
       val q = newStream.writeStream.outputMode("append")
         .foreachBatch(ingestBatch(coarse, cbRow, out) _)
         .start()

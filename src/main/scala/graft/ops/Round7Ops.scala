@@ -52,11 +52,6 @@ object Round7Ops {
   // aggregatable, so two 100 TB artifact generations compare with one
   // scan each) ----
 
-  private def sparkFold(c: String): String =
-    s"aggregate(transform(filter(split(md5($c), ''), ch -> ch != ''), " +
-      "ch -> CAST(ascii(ch) AS BIGINT)), 0L, " +
-      s"(a, b) -> (a * 31 + b) % $P)"
-
   private def duckFold(c: String): String =
     s"list_reduce(list_prepend(CAST(0 AS BIGINT), " +
       s"list_transform(string_split(md5($c), ''), " +
@@ -141,33 +136,22 @@ object Round7Ops {
          |LEFT JOIN tope t ON s.vec_id = t.vec_id, nc c, nn n, dd d
          |ORDER BY s.adc DESC, s.vec_id ASC""".stripMargin
 
-  // (root, file, expect) -> built-or-validated: persisted code
-  // REFEREES. A referee re-encode is deterministic in (corpus,
-  // codebooks), so it is an artifact — recomputing it per run made the
-  // lifecycle gates time the proof, not the operation (round-7
-  // verdict, What's wrong 4). The EXPECT marker is part of the key: a
-  // corpus regenerated mid-session changes the marker, and a stale
-  // (root, file) memo hit must not serve the old referee (round-8
-  // advice).
-  private val builtRef =
-    scala.collection.mutable.Map.empty[(String, String, String), Unit]
+  // (root, file, expect) -> root: persisted code REFEREES. A referee
+  // re-encode is deterministic in (corpus, codebooks), so it is an
+  // artifact — recomputing it per run made the lifecycle gates time the
+  // proof, not the operation (round-7 verdict, What's wrong 4). The
+  // EXPECT marker is part of the key: a corpus regenerated mid-session
+  // changes the marker, and a stale (root, file) memo hit must not
+  // serve the old referee.
+  private val referees = new ArtifactStore.Memo[(String, String, String),
+    Unit](k => s"_meta_${k._2}.json")
 
   /** Marker-gated persisted referee codes `<root>/<file>`. */
   private def persistedCodes(
       s: org.apache.spark.sql.SparkSession, root: String, file: String,
       expect: String)(build: => DataFrame): DataFrame = {
-    val mkf = s"_meta_$file.json"
-    builtRef.synchronized {
-      builtRef.getOrElseUpdate((root, file, expect), {
-        if (!ArtifactStore.markerOk(root, expect, mkf))
-          ArtifactStore.withBuildLock(root) {
-            // re-check under the cross-process lock (round-13 advice)
-            if (!ArtifactStore.markerOk(root, expect, mkf)) {
-              build.write.mode("overwrite").parquet(s"$root/$file")
-              ArtifactStore.writeMarker(root, expect, mkf)
-            }
-          }
-      })
+    referees((root, file, expect), "")((root, expect, ())) { (r, _) =>
+      build.write.mode("overwrite").parquet(s"$r/$file")
     }
     s.read.parquet(s"$root/$file")
   }

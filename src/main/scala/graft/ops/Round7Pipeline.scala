@@ -34,11 +34,6 @@ object Round7Pipeline {
   private val lcgVal =
     "((doc_id * 1103515245 + 12345) % 2147483648) % 10 = 7"
 
-  // the q47 8-function MinHash signature over rolling-131 token hashes
-  private val sig = "transform(sequence(0, 7), i -> " +
-    "array_min(transform(th, h -> ((2*i + 1) * h + 7919 * i) " +
-    "% 1000000007)))"
-
   private val duckMh = (lo: Int, hi: Int) =>
     s"array_to_string(list_transform(range($lo, $hi), i -> " +
       "list_min(list_transform(th, h -> ((2*i + 1) * h + 7919 * i) " +

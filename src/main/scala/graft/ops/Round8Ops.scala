@@ -448,7 +448,7 @@ object Round8Ops {
       // over current.json atomically — a crash mid-swap leaves the old
       // pointer intact (readers never see a partial write)
       val proot = ArtifactStore.root(
-        s"graft_idxptr_${VecIndex.dirDigest(dir)}")
+        s"graft_idxptr_${ArtifactStore.dirDigest(dir)}")
       ArtifactStore.mkdirs(proot)
       writePointer(proot, 2L, v2, n)
       // SERVE through the pointer

@@ -41,55 +41,32 @@ object Round9More {
   private def dataFiles(root: String): Long =
     ArtifactStore.dataFileCount(root)
 
-  // dir -> (frag root, content marker, embeddings file signature):
-  // q249's FRAGMENTED codes artifact, persisted once per corpus behind
-  // a written-last marker (round-14 verdict "What's wrong 3": rebuilding
-  // the fragmentation inside the gate made the timed composition
-  // unstable across contexts — the timed pass is now exactly
-  // fragment-READ + compact + prove, every run).
-  private val builtFrag =
-    scala.collection.mutable.Map.empty[String, (String, String, String)]
-  private[ops] var fragBuilds = 0 // spec hook: counts actual builds
-
-  /** Test hook: forget the in-JVM registry (the on-disk artifact and
-    * marker survive — a "new session").
-    */
-  private[ops] def dropFragMemo(): Unit =
-    builtFrag.synchronized { builtFrag.clear() }
+  // (dir, expect) -> frag root: q249's FRAGMENTED codes artifact,
+  // persisted once per corpus (round-14 verdict "What's wrong 3":
+  // rebuilding the fragmentation inside the gate made the timed
+  // composition unstable across contexts — the timed pass is now
+  // exactly fragment-READ + compact + prove, every run). `expect`
+  // carries the serving index root, so it is part of the key.
+  private[ops] val builtFrag = new ArtifactStore.Memo[(String, String), Unit]
 
   /** The persisted 8-way-fragmented codes artifact for `dir`: the
     * small-file layout repeated ingest deltas leave in a cell-
     * partitioned store, pinned on disk so q249's timed pass reads the
     * SAME fragment set every run. Keyed to the serving index root and
-    * the embeddings table signature; built under the cross-process
-    * build lock, marker written last.
+    * the embeddings table signature.
     */
   private[ops] def fragArtifact(
-      s: SparkSession, dir: String, idx: String): String =
-    builtFrag.synchronized {
-      val sig = VecIndex.tableFileSig(dir, "embeddings")
-      val p = ArtifactStore.root(
-        s"graft_idxfrag_${VecIndex.dirDigest(dir)}")
-      val expect = s"idxfrag:v1:idx=$idx:sig=$sig"
-      val hit = builtFrag.get(dir).exists { case (_, e0, s0) =>
-        s0 == sig && e0 == expect && ArtifactStore.markerOk(p, e0)
-      }
-      if (!hit) {
-        if (!ArtifactStore.markerOk(p, expect))
-          ArtifactStore.withBuildLock(p) {
-            // re-check under the cross-process lock (round-13 advice)
-            if (!ArtifactStore.markerOk(p, expect)) {
-              VecIndex.readCodes(s, idx)
-                .repartition(8, col("vec_id")).write.mode("overwrite")
-                .partitionBy("cid").parquet(s"$p/codes")
-              ArtifactStore.writeMarker(p, expect)
-              fragBuilds += 1
-            }
-          }
-        builtFrag(dir) = (p, expect, sig)
-      }
-      builtFrag(dir)._1
-    }
+      s: SparkSession, dir: String, idx: String): String = {
+    val sig = ArtifactStore.tableFileSig(dir, "embeddings")
+    val expect = s"idxfrag:v1:idx=$idx:sig=$sig"
+    builtFrag((dir, expect), sig)((ArtifactStore.root(
+        s"graft_idxfrag_${ArtifactStore.dirDigest(dir)}"), expect, ())) {
+      (p, _) =>
+        VecIndex.readCodes(s, idx)
+          .repartition(8, col("vec_id")).write.mode("overwrite")
+          .partitionBy("cid").parquet(s"$p/codes")
+    }._1
+  }
 
   /** Copy an artifact root (coarse + pq + codes) into `dst` — the
     * generation-directory layout q250's GC manages. Row counts are the
@@ -217,8 +194,8 @@ object Round9More {
       // COMPACT: cluster each cell into ONE task (hash repartition on
       // cid puts a cell's rows in exactly one partition), then rewrite
       // — one columnar file per cell directory
-      val croot = Round6Ops.scratchDir(
-        s"graft_idxcomp_${VecIndex.dirDigest(dir)}")
+      val croot = ArtifactStore.scratchDir(
+        s"graft_idxcomp_${ArtifactStore.dirDigest(dir)}")
       fragmented.repartition(col("cid")).write.mode("overwrite")
         .partitionBy("cid").parquet(s"$croot/codes")
       val compacted = VecIndex.readCodes(s, croot)
@@ -266,13 +243,11 @@ object Round9More {
       val base = e.filter(col("vec_id") % 10 < 8)
       val v1 = VecIndex.artifacts(s, dir, "base", base)
       val v2 = VecIndex.artifacts(s, dir, "full", e)
-      val proot = ArtifactStore.root(
-        s"graft_idxptr_gc_${VecIndex.dirDigest(dir)}")
       // a deterministic three-generation deployment, rebuilt per run:
       // gen1 (old, the rollback target), gen2 (current), gen3 (a failed
       // candidate — q245's half-written shape)
-      ArtifactStore.deleteRecursive(proot)
-      ArtifactStore.mkdirs(proot)
+      val proot = ArtifactStore.scratchDir(
+        s"graft_idxptr_gc_${ArtifactStore.dirDigest(dir)}")
       copyArtifact(s, v1, s"$proot/gen1")
       copyArtifact(s, v2, s"$proot/gen2")
       VecIndex.readCodes(s, v2).filter(col("vec_id") % 5 =!= 2)

@@ -290,7 +290,7 @@ object Round9Ops {
       // own pointer root — q244's forward-swap pointer is a separate
       // deployment and must not be disturbed by the rollback drill
       val proot = ArtifactStore.root(
-        s"graft_idxptr_rb_${VecIndex.dirDigest(dir)}")
+        s"graft_idxptr_rb_${ArtifactStore.dirDigest(dir)}")
       ArtifactStore.mkdirs(proot)
       // generation v1 is CURRENT (it validated when it was promoted)
       val nBase = base.count()
@@ -390,8 +390,8 @@ object Round9Ops {
       val cbRow = s.read.parquet(s"$idx/pq")
       val qStream = Round6Ops.embStream(s, dir)
         .filter(col("vec_id") < Round7Final.QB)
-      val out = Round6Ops.scratchDir(
-        s"graft_streamgraphpq_${VecIndex.dirDigest(dir)}")
+      val out = ArtifactStore.scratchDir(
+        s"graft_streamgraphpq_${ArtifactStore.dirDigest(dir)}")
       val q = qStream.writeStream.outputMode("append")
         .foreachBatch(servePqBatch(ivc, edges, hard, cb, codes, cbRow,
           out) _)

@@ -90,7 +90,7 @@ object Sinks {
       s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ
       // table names carry the source dir so sf0.01 verify and sf0.1 bench
       // never share bucketed data
-      val tag = VecIndex.dirDigest(dir)
+      val tag = ArtifactStore.dirDigest(dir)
       val liTbl = s"graft_lineitem_bucketed_$tag"
       val oTbl = s"graft_orders_bucketed_$tag"
       // external tables under the per-JVM scratch dir: no stale managed

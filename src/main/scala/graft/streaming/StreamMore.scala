@@ -10,7 +10,6 @@ import graft.Tables
   * mode (q56 demonstrated the batch form).
   */
 object StreamMore {
-  import Det._
 
   val queries: Seq[Q] = Seq(
     // E12: stream-stream INNER join with an event-time range condition —

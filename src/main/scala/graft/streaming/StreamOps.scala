@@ -43,7 +43,7 @@ object StreamOps {
       else {
         val streamDir = java.nio.file.Paths.get(
           sys.props("java.io.tmpdir"),
-          s"graft_stream_src_${graft.ops.VecIndex.dirDigest(dir)}")
+          s"graft_stream_src_${graft.ops.ArtifactStore.dirDigest(dir)}")
         java.nio.file.Files.createDirectories(streamDir)
         val link = streamDir.resolve("events.parquet")
         // NOFOLLOW: a broken symlink (testdata dir moved/recreated) reports

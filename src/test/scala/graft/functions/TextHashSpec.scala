@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The codegen text-hash kernels must agree EXACTLY with the HOF
   * expression shapes they replace (Dedup.sparkTokenHashes,
-  * Round11Ops.sparkPosTokenHashes, Round12Ops.sparkPosGrams, the
+  * Round11Ops.sparkPosTokenHashes, the positional W-gram fold, the
   * q47/q238 MinHash signature) — they are cost optimizations, never
   * semantic changes. The HOF originals are inlined here verbatim so a
   * drift in either side fails the comparison.

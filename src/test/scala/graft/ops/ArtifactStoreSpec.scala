@@ -4,7 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The Hadoop-FS artifact seam: marker round-trip, recursive table
   * signatures (partitioned layouts included), loud failure on missing
-  * tables, and the re-entrant cross-process build lock.
+  * tables, the re-entrant cross-process build lock, and the shared
+  * build protocol (`ensure` + `Memo`) every persisted artifact uses.
   */
 class ArtifactStoreSpec extends AnyFunSuite {
 
@@ -138,6 +139,118 @@ class ArtifactStoreSpec extends AnyFunSuite {
         List("in1", "out1", "in0", "out0")).contains(seq),
         s"interleaved build sections: $seq")
       assert(ArtifactStore.exists(s"$root/_build.lock"))
+    } finally ArtifactStore.deleteRecursive(root)
+    // a build that wipes its own locked root (stream state) keeps the
+    // lock file, so the lock stays exclusive across processes
+    val name = s"graft_asspec_${System.nanoTime()}"
+    val held = ArtifactStore.root(name)
+    try ArtifactStore.withBuildLock(held) {
+      ArtifactStore.writeString(s"$held/old/part", "x")
+      assert(ArtifactStore.scratchDir(name) == held)
+      assert(ArtifactStore.listEntries(held) == Seq("_build.lock"))
+    } finally ArtifactStore.deleteRecursive(held)
+  }
+
+  /** A memo over `root` whose build writes `<root>/data` and counts its
+    * own runs; `sig` and `expect` are read per call.
+    */
+  private class Probe(root: String) {
+    val memo = new ArtifactStore.Memo[String, Unit]
+    val runs = new java.util.concurrent.atomic.AtomicInteger
+    @volatile var sig = "s1"
+    @volatile var expect = "v1"
+    @volatile var fail = false
+    @volatile var pause = 0L
+    def serve(): String = memo("k", sig)((root, expect, ())) { (r, _) =>
+      runs.incrementAndGet()
+      Thread.sleep(pause)
+      if (fail) throw new IllegalStateException("build failed")
+      ArtifactStore.writeString(s"$r/data", expect)
+    }._1
+    def marker: Option[String] = {
+      val mk = ArtifactStore.markerPath(root)
+      if (ArtifactStore.exists(mk)) Some(ArtifactStore.readString(mk))
+      else None
+    }
+  }
+
+  test("protocol: a build that throws publishes no marker, and the " +
+    "next call rebuilds") {
+    val root = tmp()
+    try {
+      val p = new Probe(root)
+      p.fail = true
+      intercept[IllegalStateException](p.serve())
+      assert(p.marker.isEmpty, "a failed build published its marker")
+      assert(p.memo.builds == 0)
+      p.fail = false
+      assert(p.serve() == root)
+      assert(p.runs.get == 2, "the failed build was not retried")
+      assert(p.memo.builds == 1)
+      assert(p.marker.contains("v1"))
+    } finally ArtifactStore.deleteRecursive(root)
+  }
+
+  test("protocol: a marker mismatch rebuilds — whether the marker on " +
+    "disk changes or the table signature moves to a new expect") {
+    val root = tmp()
+    try {
+      val p = new Probe(root)
+      p.serve()
+      p.serve()
+      assert(p.memo.builds == 1, "an unchanged artifact was rebuilt")
+      // the marker on disk no longer matches the memo's entry
+      ArtifactStore.writeString(ArtifactStore.markerPath(root), "stale")
+      p.serve()
+      assert(p.memo.builds == 2, "a stale on-disk marker was trusted")
+      assert(p.marker.contains("v1"))
+      // the table changed: new signature, new expected marker
+      p.sig = "s2"
+      p.expect = "v2"
+      p.serve()
+      assert(p.memo.builds == 3, "a changed table served the old build")
+      assert(p.marker.contains("v2"))
+      assert(ArtifactStore.readString(s"$root/data") == "v2")
+    } finally ArtifactStore.deleteRecursive(root)
+  }
+
+  test("protocol: two threads produce one build — through one memo, " +
+    "and through two memos (two sessions) sharing the root") {
+    val root = tmp()
+    try {
+      def race(serves: Seq[() => String]): Unit = {
+        val ts = serves.map(f => new Thread(() => { f(); () }))
+        ts.foreach(_.start()); ts.foreach(_.join())
+      }
+      val p = new Probe(root)
+      p.pause = 200L
+      race(Seq(() => p.serve(), () => p.serve()))
+      assert(p.runs.get == 1 && p.memo.builds == 1,
+        s"one memo, two threads: ${p.runs.get} builds")
+      // a second registry over the same root (another session, or
+      // another JVM) must see the published marker inside the lock
+      ArtifactStore.deleteRecursive(ArtifactStore.markerPath(root))
+      val (a, b) = (new Probe(root), new Probe(root))
+      a.pause = 200L; b.pause = 200L
+      race(Seq(() => a.serve(), () => b.serve()))
+      assert(a.runs.get + b.runs.get == 1,
+        s"two memos, two threads: ${a.runs.get + b.runs.get} builds")
+      assert(a.memo.builds + b.memo.builds == 1)
+      assert(a.marker.contains("v1"))
+    } finally ArtifactStore.deleteRecursive(root)
+  }
+
+  test("protocol: after drop() the artifact is served from its marker " +
+    "with builds unchanged") {
+    val root = tmp()
+    try {
+      val p = new Probe(root)
+      p.serve()
+      val before = p.memo.builds
+      p.memo.drop()
+      assert(p.serve() == root)
+      assert(p.memo.builds == before && p.runs.get == 1,
+        "a dropped registry rebuilt instead of serving from the marker")
     } finally ArtifactStore.deleteRecursive(root)
   }
 }

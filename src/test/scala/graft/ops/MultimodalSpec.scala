@@ -70,22 +70,22 @@ class MultimodalSpec extends AnyFunSuite {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     graft.SparkEntry.queries("q61_multimodal_decode")(spark, dir).collect()
-    val before = Multimodal.mediaBuilds
-    Multimodal.dropMediaMemo()
+    val before = Multimodal.builtMedia.builds
+    Multimodal.builtMedia.drop()
     val again = graft.SparkEntry
       .queries("q61_multimodal_decode")(spark, dir).collect()
-    assert(Multimodal.mediaBuilds == before,
+    assert(Multimodal.builtMedia.builds == before,
       "fresh-marker run re-encoded the media column")
     // the stored payloads really are the corpus media: every doc
     // decodes to its closed-form stats through the real codec
     assert(again.length ==
       graft.Tables.table(spark, dir, "documents").count())
     val marker = ArtifactStore.markerPath(ArtifactStore.root(
-      s"graft_media_${VecIndex.dirDigest(dir)}"))
+      s"graft_media_${ArtifactStore.dirDigest(dir)}"))
     ArtifactStore.writeString(marker, "{\"stale\":true}")
-    Multimodal.dropMediaMemo()
+    Multimodal.builtMedia.drop()
     graft.SparkEntry.queries("q61_multimodal_decode")(spark, dir).collect()
-    assert(Multimodal.mediaBuilds == before + 1,
+    assert(Multimodal.builtMedia.builds == before + 1,
       "stale marker did not force a rebuild")
   }
 }

@@ -69,7 +69,7 @@ class Round10Spec extends AnyFunSuite {
     val out1 = run("q254_backfill_resume").collect()
     val root = java.nio.file.Paths.get(
       sys.props("java.io.tmpdir"),
-      s"graft_backfill_${VecIndex.dirDigest(dir)}")
+      s"graft_backfill_${ArtifactStore.dirDigest(dir)}")
     val mf = java.nio.file.Files.readString(root.resolve("manifest.json"))
     val mf1 = java.nio.file.Files.readString(
       root.resolve("manifest_pass1.json"))
@@ -211,17 +211,17 @@ class Round10Spec extends AnyFunSuite {
     "hash table without re-decoding; a stale marker forces the rebuild") {
     assume(available)
     run("q262_image_phash_dedup").collect()
-    val before = Round10Final.phashBuilds
-    Round10Final.dropPhashMemo()
+    val before = Round10Final.builtPhash.builds
+    Round10Final.builtPhash.drop()
     run("q262_image_phash_dedup").collect()
-    assert(Round10Final.phashBuilds == before,
+    assert(Round10Final.builtPhash.builds == before,
       "fresh-marker serve re-ran the decode pass")
     val marker = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_phash_${VecIndex.dirDigest(dir)}", "_meta.json")
+      s"graft_phash_${ArtifactStore.dirDigest(dir)}", "_meta.json")
     java.nio.file.Files.writeString(marker, "{\"stale\":true}")
-    Round10Final.dropPhashMemo()
+    Round10Final.builtPhash.drop()
     run("q262_image_phash_dedup").collect()
-    assert(Round10Final.phashBuilds == before + 1,
+    assert(Round10Final.builtPhash.builds == before + 1,
       "stale marker did not force a rebuild")
   }
 
@@ -230,7 +230,7 @@ class Round10Spec extends AnyFunSuite {
     assume(available)
     val rows = run("q263_stream_chunk_store").collect()
     val out = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_chunkstream_${VecIndex.dirDigest(dir)}")
+      s"graft_chunkstream_${ArtifactStore.dirDigest(dir)}")
     val dirs = out.toFile.listFiles().filter(_.getName.startsWith("b"))
     assert(dirs.length >= 2,
       s"ingest did not span micro-batches: ${dirs.length} batch dirs")

@@ -68,7 +68,7 @@ class Round11ExtraSpec extends AnyFunSuite {
     assume(available(dir), s"$dir absent — skipping")
     graft.SparkEntry
       .queries("q274_dedup_store_compaction")(spark, dir).collect()
-    val digest = VecIndex.dirDigest(dir)
+    val digest = ArtifactStore.dirDigest(dir)
     val croot = new java.io.File(sys.props("java.io.tmpdir"),
       s"graft_dedupstore_c_$digest")
     val bucketDirs = croot.listFiles()

@@ -68,7 +68,7 @@ class Round11MoreSpec extends AnyFunSuite {
       assert(r.getLong(4) <= r.getLong(1), "uniq <= docs")
       assert(r.getLong(5) <= r.getLong(6), "p50 <= p90")
     }
-    val digest = VecIndex.dirDigest(dir)
+    val digest = ArtifactStore.dirDigest(dir)
     val fps = spark.read.parquet(java.nio.file.Paths.get(
       sys.props("java.io.tmpdir"), s"graft_cardfps_$digest").toString)
     assert(fps.count() == fps.select("source", "h").distinct().count(),
@@ -81,5 +81,66 @@ class Round11MoreSpec extends AnyFunSuite {
       "state carries exactly the base and delta generations")
     assert(hist.agg(sum(col("cnt"))).head().getLong(0) == docs.count(),
       "histogram counts cover the corpus exactly once")
+  }
+
+  test("q268: rewriting documents in the data dir rebuilds the dedup " +
+    "store on the next call instead of serving the stale one") {
+    assume(available(dir), s"$dir absent — skipping")
+    // a private copy of the corpus the test may rewrite
+    val scratch =
+      java.nio.file.Files.createTempDirectory("graft_dedupstale_").toString
+    graft.Tables.names.foreach { n =>
+      val from = java.nio.file.Paths.get(dir, s"$n.parquet")
+      if (java.nio.file.Files.isRegularFile(from))
+        java.nio.file.Files.copy(from,
+          java.nio.file.Paths.get(scratch, s"$n.parquet"))
+    }
+    def hashes(path: String, c: org.apache.spark.sql.Column): Set[String] =
+      spark.read.parquet(path).select(c).collect().map(_.getString(0)).toSet
+    def corpus = hashes(s"$scratch/documents.parquet", md5(col("text")))
+    def sameSet(a: Set[String], b: Set[String]) =
+      a.size == b.size && a.subsetOf(b)
+    try {
+      val store = Round11More.buildDedupStore(spark, scratch)
+      assert(sameSet(hashes(store, col("h")), corpus))
+      // rewrite the copy's documents: only the even doc_ids survive
+      spark.read.parquet(s"$dir/documents.parquet")
+        .filter(col("doc_id") % 2 === 0)
+        .write.mode("overwrite").parquet(s"$scratch/documents.parquet")
+      // re-point the views so the next registration lists the new files
+      graft.Tables.registerAll(spark, dir)
+      val store2 = Round11More.buildDedupStore(spark, scratch)
+      assert(store2 == store, "the store root must stay deterministic")
+      assert(sameSet(hashes(store2, col("h")), corpus),
+        "a documents rewrite served the STALE dedup store")
+    } finally {
+      val d = ArtifactStore.dirDigest(scratch)
+      Seq(Round11More.dedupStoreName(scratch), s"graft_dedupwaves_$d")
+        .foreach(n => ArtifactStore.deleteRecursive(ArtifactStore.root(n)))
+      ArtifactStore.deleteRecursive(scratch)
+      graft.Tables.registerAll(spark, dir)
+    }
+  }
+
+  test("drainTo: a locked root holding only its _build.lock still " +
+    "counts as empty — a stream that writes no batch throws") {
+    val root = ArtifactStore.root(s"graft_drainspec_${System.nanoTime()}")
+    val src =
+      java.nio.file.Files.createTempDirectory("graft_drainsrc_").toString
+    try ArtifactStore.withBuildLock(root) {
+      assert(ArtifactStore.listEntries(root) == Seq("_build.lock"))
+      val schema = new org.apache.spark.sql.types.StructType()
+        .add("doc_id", "long")
+      val q = spark.readStream.schema(schema).parquet(src)
+        .writeStream
+        .foreachBatch((_: org.apache.spark.sql.DataFrame, _: Long) => ())
+        .start()
+      val e = intercept[IllegalStateException](Round6Ops.drainTo(q, root))
+      assert(e.getMessage.contains("wrote no batch"))
+      assert(!q.isActive, "drainTo must stop the query")
+    } finally {
+      ArtifactStore.deleteRecursive(root)
+      ArtifactStore.deleteRecursive(src)
+    }
   }
 }

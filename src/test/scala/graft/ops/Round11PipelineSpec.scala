@@ -55,7 +55,7 @@ class Round11PipelineSpec extends AnyFunSuite {
     assert(rows.map(_.getLong(1)).sum == nUnique,
       "release covers every surviving (deduped) document")
     val root = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_release_${VecIndex.dirDigest(dir)}")
+      s"graft_release_${ArtifactStore.dirDigest(dir)}")
     assert(new java.io.File(root, "manifest.json").exists())
     assert(!root.listFiles().exists(_.getName.endsWith(".tmp")),
       "atomic manifest write leaves no temp residue")

@@ -86,7 +86,7 @@ class Round7MoreSpec extends AnyFunSuite {
     // what the gate exists to exercise
     val out = new java.io.File(java.nio.file.Paths.get(
       sys.props("java.io.tmpdir"),
-      s"graft_streamingest_${VecIndex.dirDigest(dir)}").toString)
+      s"graft_streamingest_${ArtifactStore.dirDigest(dir)}").toString)
     val gens = Option(out.listFiles()).getOrElse(Array.empty)
       .filter(f => f.isDirectory && f.getName.startsWith("b"))
     assert(gens.length >= 2,

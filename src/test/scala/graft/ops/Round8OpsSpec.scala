@@ -111,7 +111,7 @@ class Round8OpsSpec extends AnyFunSuite {
     val a = graft.SparkEntry
       .queries("q244_index_generation_swap")(spark, dir).collect()
     val proot = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_idxptr_${graft.ops.VecIndex.dirDigest(dir)}")
+      s"graft_idxptr_${graft.ops.ArtifactStore.dirDigest(dir)}")
     val ptr = java.nio.file.Files.readString(
       proot.resolve("current.json"))
     assert(ptr.contains("\"gen\":2"), s"pointer not at gen 2: $ptr")

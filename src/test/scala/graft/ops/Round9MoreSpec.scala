@@ -45,7 +45,7 @@ class Round9MoreSpec extends AnyFunSuite {
       assert(r.getLong(7) == 0L, "row-count delta must be zero")
       assert(r.getLong(8) == 0L, "fingerprint delta must be zero")
     }
-    val dg = VecIndex.dirDigest(dir)
+    val dg = ArtifactStore.dirDigest(dir)
     val tmp = sys.props("java.io.tmpdir")
     val comp = s"$tmp/graft_idxcomp_$dg/codes"
     val frag = s"$tmp/graft_idxfrag_$dg/codes"
@@ -78,7 +78,7 @@ class Round9MoreSpec extends AnyFunSuite {
         "kept generations must retain their data files")
     }
     val proot = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_idxptr_gc_${VecIndex.dirDigest(dir)}")
+      s"graft_idxptr_gc_${ArtifactStore.dirDigest(dir)}")
     assert(!java.nio.file.Files.exists(proot.resolve("gen3")),
       "the unreferenced candidate generation must be gone")
     assert(java.nio.file.Files.exists(proot.resolve("gen1")) &&

@@ -45,7 +45,7 @@ class Round9OpsSpec extends AnyFunSuite {
         "candidate code count should fall short of the corpus")
     }
     val proot = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_idxptr_rb_${VecIndex.dirDigest(dir)}")
+      s"graft_idxptr_rb_${ArtifactStore.dirDigest(dir)}")
     val ptr = java.nio.file.Files.readString(
       proot.resolve("current.json"))
     assert(ptr.contains("\"gen\":1"), s"pointer moved off v1: $ptr")

@@ -68,12 +68,12 @@ class VecIndexStalenessSpec extends AnyFunSuite {
       val root = VecIndex.artifacts(spark, scratch, "full", e1)
       VecIndex.residArtifacts(spark, scratch, e1)
       Round7Final.graphArtifacts(spark, scratch)
-      val (b1, g1) = (VecIndex.builds, Round7Final.graphBuilds)
+      val (b1, g1) = (VecIndex.built.builds, Round7Final.builtGraph.builds)
       // unchanged corpus: every tier serves, none rebuilds
       VecIndex.artifacts(spark, scratch, "full", e1)
       VecIndex.residArtifacts(spark, scratch, e1)
       Round7Final.graphArtifacts(spark, scratch)
-      assert(VecIndex.builds == b1 && Round7Final.graphBuilds == g1,
+      assert(VecIndex.built.builds == b1 && Round7Final.builtGraph.builds == g1,
         "unchanged corpus was rebuilt instead of served")
       // REWRITE the embeddings table in-session: drop the odd half
       graft.Tables.load(spark, src, "embeddings")
@@ -84,13 +84,13 @@ class VecIndexStalenessSpec extends AnyFunSuite {
       val e2 = graft.Tables.table(spark, scratch, "embeddings")
       val root2 = VecIndex.artifacts(spark, scratch, "full", e2)
       assert(root2 == root, "artifact root must stay deterministic")
-      assert(VecIndex.builds == b1 + 1,
+      assert(VecIndex.built.builds == b1 + 1,
         "in-session embeddings rewrite served a STALE IVF-PQ index")
       VecIndex.residArtifacts(spark, scratch, e2)
-      assert(VecIndex.builds == b1 + 2,
+      assert(VecIndex.built.builds == b1 + 2,
         "in-session embeddings rewrite served a STALE residual index")
       Round7Final.graphArtifacts(spark, scratch)
-      assert(Round7Final.graphBuilds == g1 + 1,
+      assert(Round7Final.builtGraph.builds == g1 + 1,
         "in-session embeddings rewrite served a STALE kNN graph")
       // and the rebuilt index really is the new corpus: codes cover
       // exactly the surviving vec_ids
@@ -98,7 +98,7 @@ class VecIndexStalenessSpec extends AnyFunSuite {
       assert(VecIndex.readCodes(spark, root2)
         .select(col("vec_id")).distinct().count() == n2)
     } finally {
-      val d = VecIndex.dirDigest(scratch)
+      val d = ArtifactStore.dirDigest(scratch)
       Seq(s"graft_vecidx_${d}_full", s"graft_vecidx_${d}_resid",
         s"graft_knngraph_$d").foreach(n =>
         ArtifactStore.deleteRecursive(ArtifactStore.root(n)))

@@ -17,7 +17,15 @@ def load(p):
 def main():
     base, new = load(sys.argv[1]), load(sys.argv[2])
     top_n = int(sys.argv[3]) if len(sys.argv) > 3 else 15
-    common = sorted(set(base) & set(new))
+    shared = set(base) & set(new)
+    # a zero timing has no ratio: skip it instead of dividing by it
+    common = sorted(q for q in shared if base[q] > 0 and new[q] > 0)
+    if not common:
+        sys.exit(f"abcmp: no query has a nonzero timing in both files "
+                 f"({len(shared)} shared)")
+    if len(common) < len(shared):
+        print(f"skipped {len(shared) - len(common)} queries with a zero "
+              f"timing")
     tb = sum(base[q] for q in common)
     tn = sum(new[q] for q in common)
     ratios = [(base[q] / new[q], q) for q in common]
