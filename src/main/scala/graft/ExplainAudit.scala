@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Physical-plan audit: prints the formatted plan for the scale-critical
   * queries and greps for the properties a 100 TB deployment depends on —
   * parquet filter pushdown + column pruning, broadcast vs shuffle join
@@ -11,21 +9,11 @@ import org.apache.spark.sql.SparkSession
   */
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
-    // same env handling and AQE stance as Bench so the dumped plans are
-    // the shapes the bench actually times (at sf0.001 AQE broadcasts
-    // everything and the structural differences disappear)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PART", "64m"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // Bench's session so the dumped plans are the shapes the bench
+    // actually times (at sf0.001 AQE broadcasts everything and the
+    // structural differences disappear)
+    val spark = GraftSession.builder(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val targets =

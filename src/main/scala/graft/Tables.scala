@@ -75,11 +75,9 @@ object Tables {
     */
   def registerAll(spark: SparkSession, dir: String): Unit = {
     if (registered.get(spark) != dir) {
-      // codegen kernel functions ride the view registration: every
-      // query path passes through here before building expressions
-      graft.functions.ArrayDot.register(spark)
-      graft.functions.VecDot.register(spark)
-      graft.functions.TextHash.register(spark)
+      // the SQL functions ride the view registration: every query path
+      // passes through here before building expressions
+      GraftSession.setup(spark)
       names.foreach { n =>
         load(spark, dir, n).createOrReplaceTempView(n)
       }

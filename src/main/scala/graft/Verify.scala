@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -19,20 +18,9 @@ object Verify {
       require(unknown.isEmpty,
         s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // same AQE coalescing stance as Bench (scale-adaptive partition
-    // sizing) so correctness runs exercise the exact plans the bench
-    // times; env-overridable for comparison legs
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PART", "64m"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // Bench's session, so correctness runs exercise the plans it times
+    val spark = GraftSession.builder(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // retention sweep: UUID-suffixed tempRoot scratch from previous runs
     // (round-14 verdict, "What's missing 3") — and this run's own on exit

@@ -1,5 +1,6 @@
 package graft.exec
 
+import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 import graft.meta.{DataDictionary, SchemaIntrospect}
 import graft.nl.{LlmClient, MockLlmClient}
@@ -85,7 +86,7 @@ object Cli {
                   .createOrReplaceTempView(table)
               }
             } catch {
-              case e: Throwable =>
+              case NonFatal(e) =>
                 System.err.println(s"cannot open $p: ${e.getMessage}")
                 sys.exit(Runner.ExitCodes.OpenError)
             }

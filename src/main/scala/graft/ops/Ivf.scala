@@ -3,7 +3,6 @@ package graft.ops
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.ArrayDot
 
 /** IVF-style ANN + vector aggregation (SURVEY.md §2.3 E7 scale path #2).
   *
@@ -29,19 +28,17 @@ object Ivf {
     s"list_reduce(list_transform(range(len($a)), " +
       s"i -> CAST($a[i+1] AS DOUBLE) * CAST($b[i+1] AS DOUBLE)), (x, y) -> x + y)"
 
-  private val ITERS = 2
-
   val queries: Seq[Q] = Seq(
     Q(
       "q74_ann_ivf",
       s"""WITH ${KMeans.kkCte()},
-         |${KMeans.oracleCtes(KMeans.duckK, ITERS)},
+         |${KMeans.oracleCtes(KMeans.duckK, VecIndex.CITERS)},
          |assign AS MATERIALIZED (
          |  SELECT e.vec_id, e.embedding, c.cid,
          |    ROW_NUMBER() OVER (PARTITION BY e.vec_id
          |      ORDER BY ${KMeans.duckDot("e.embedding", "c.cs")} DESC,
          |        c.cid ASC) AS rn
-         |  FROM embeddings e, cl$ITERS c),
+         |  FROM embeddings e, cl${VecIndex.CITERS} c),
          |lists AS MATERIALIZED (SELECT vec_id, embedding, cid FROM assign WHERE rn = 1),
          |probes AS MATERIALIZED (SELECT cid FROM assign WHERE vec_id = 0 AND rn <= 2),
          |q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)
@@ -51,9 +48,8 @@ object Ivf {
          |WHERE l.vec_id <> 0
          |ORDER BY cosine DESC, vec_id ASC
          |LIMIT 5""".stripMargin) { (s, dir) =>
-      ArrayDot.register(s)
       val e = Tables.table(s, dir, "embeddings")
-      val cb = KMeans.codebook(s, e, KMeans.servingK(e), ITERS)
+      val cb = KMeans.codebook(s, e, KMeans.servingK(e), VecIndex.CITERS)
       // inverted lists: map-side argmax assignment under the broadcast
       // trained codebook (no k-times row blow-up, no window)
       val lists = KMeans.assign(e, cb)

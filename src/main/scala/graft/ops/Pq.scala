@@ -219,7 +219,6 @@ object Pq {
 
   // coarse geometry: cell count is corpus-derived (KMeans.servingK —
   // k = max(4, floor(sqrt(n))/2)), shared with q74's index
-  private val CITERS = 2
   private val NPROBE = 2
   private val QN = 32 // batched-search (q217) query count
 
@@ -271,14 +270,14 @@ object Pq {
     Q(
       "q207_ivf_pq_search",
       s"""WITH ${KMeans.kkCte()},
-         |${KMeans.oracleCtes(KMeans.duckK, CITERS)},
+         |${KMeans.oracleCtes(KMeans.duckK, VecIndex.CITERS)},
          |$pqChains,
          |assign AS MATERIALIZED (
          |  SELECT e.vec_id, e.embedding, c.cid,
          |    ROW_NUMBER() OVER (PARTITION BY e.vec_id
          |      ORDER BY ${KMeans.duckDot("e.embedding", "c.cs")} DESC,
          |        c.cid ASC) AS rn
-         |  FROM embeddings e, cl$CITERS c),
+         |  FROM embeddings e, cl${VecIndex.CITERS} c),
          |probes AS MATERIALIZED (SELECT cid FROM assign WHERE vec_id = 0
          |  AND rn <= $NPROBE),
          |cand AS MATERIALIZED (
@@ -325,14 +324,14 @@ object Pq {
     Q(
       "q217_batched_ivf_pq",
       s"""WITH ${KMeans.kkCte()},
-         |${KMeans.oracleCtes(KMeans.duckK, CITERS)},
+         |${KMeans.oracleCtes(KMeans.duckK, VecIndex.CITERS)},
          |$pqChains,
          |assign AS MATERIALIZED (
          |  SELECT e.vec_id, e.embedding, c.cid,
          |    ROW_NUMBER() OVER (PARTITION BY e.vec_id
          |      ORDER BY ${KMeans.duckDot("e.embedding", "c.cs")} DESC,
          |        c.cid ASC) AS rn
-         |  FROM embeddings e, cl$CITERS c),
+         |  FROM embeddings e, cl${VecIndex.CITERS} c),
          |lists AS MATERIALIZED (SELECT vec_id, cid FROM assign WHERE rn = 1),
          |qb AS MATERIALIZED (SELECT vec_id AS qid, embedding AS qe,
          |    ${duckScaled("embedding")} AS qs
@@ -343,7 +342,7 @@ object Pq {
          |      ROW_NUMBER() OVER (PARTITION BY q.qid
          |        ORDER BY ${KMeans.duckDot("q.qe", "c.cs")} DESC,
          |          c.cid ASC) AS rn
-         |    FROM qb q, cl$CITERS c) WHERE rn <= $NPROBE),
+         |    FROM qb q, cl${VecIndex.CITERS} c) WHERE rn <= $NPROBE),
          |${pqEncs("embeddings")},
          |cand AS MATERIALIZED (
          |  SELECT p.qid, l.vec_id
@@ -382,7 +381,7 @@ object Pq {
          |LEFT JOIN hits h ON q.qid = h.qid
          |ORDER BY q.qid""".stripMargin) { (s, dir) =>
       val e = Tables.table(s, dir, "embeddings")
-      val coarse = KMeans.codebook(s, e, KMeans.servingK(e), CITERS)
+      val coarse = KMeans.codebook(s, e, KMeans.servingK(e), VecIndex.CITERS)
       val cbRow = trainPq(s, e)
       // corpus side, built ONCE: coarse list + M stored PQ codes per
       // vector (M bytes standing in for 64 floats — the served index)

@@ -192,7 +192,7 @@ object Round10Final {
          |ORDER BY p.qid""".stripMargin) { (s, dir) =>
       val (ivc, edges, hard) = Round7Final.graphArtifacts(s, dir)
       val e = Tables.table(s, dir, "embeddings")
-      val cb = KMeans.codebook(s, e, KMeans.servingK(e), Round7Final.CITERS)
+      val cb = KMeans.codebook(s, e, KMeans.servingK(e), VecIndex.CITERS)
       def pin(df: DataFrame): DataFrame = {
         val cp = df.localCheckpoint(true)
         s.createDataFrame(cp.rdd, cp.schema)
@@ -319,14 +319,14 @@ object Round10Final {
     Q(
       "q260_cell_drift_monitor",
       s"""WITH ${KMeans.kkCte()},
-         |${KMeans.oracleCtes(KMeans.duckK, Round7Ops.CITERS)},
+         |${KMeans.oracleCtes(KMeans.duckK, VecIndex.CITERS)},
          |nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM embeddings),
          |assign AS MATERIALIZED (
          |  SELECT e.vec_id, c.cid,
          |    ROW_NUMBER() OVER (PARTITION BY e.vec_id
          |      ORDER BY ${KMeans.duckDot("e.embedding", "c.cs")} DESC,
          |        c.cid ASC) AS rn
-         |  FROM embeddings e, cl${Round7Ops.CITERS} c),
+         |  FROM embeddings e, cl${VecIndex.CITERS} c),
          |lists AS MATERIALIZED (
          |  SELECT vec_id, cid FROM assign WHERE rn = 1),
          |coh AS MATERIALIZED (
@@ -352,7 +352,7 @@ object Round10Final {
          |FROM per p, tv t
          |ORDER BY p.cid""".stripMargin) { (s, dir) =>
       val e = Tables.table(s, dir, "embeddings")
-      val cb = KMeans.codebook(s, e, KMeans.servingK(e), Round7Ops.CITERS)
+      val cb = KMeans.codebook(s, e, KMeans.servingK(e), VecIndex.CITERS)
       val half = e.count() / 2
       val coh = KMeans.assign(e, cb)
         .groupBy(col("cid"))

@@ -3,7 +3,6 @@ package graft.ops
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.ArrayDot
 
 /** Round-10 production shapes: the evaluation, serving-efficiency and
   * governance operators a training-data platform runs AROUND the
@@ -33,7 +32,6 @@ import graft.functions.ArrayDot
   */
 object Round10Ops {
 
-  private val ITERS = 2 // coarse Lloyd iterations (the q74 serving law)
   private val KANON = 5 // k-anonymity threshold
   private val BATCH = 32 // inference batch size (docs per batch)
 
@@ -56,7 +54,7 @@ object Round10Ops {
     Q(
       "q251_retrieval_metrics",
       s"""WITH ${KMeans.kkCte()},
-         |${KMeans.oracleCtes(KMeans.duckK, ITERS)},
+         |${KMeans.oracleCtes(KMeans.duckK, VecIndex.CITERS)},
          |qs AS MATERIALIZED (
          |  SELECT vec_id AS qid, embedding AS qe FROM embeddings
          |  WHERE vec_id % 125 = 0),
@@ -65,7 +63,7 @@ object Round10Ops {
          |    ROW_NUMBER() OVER (PARTITION BY e.vec_id
          |      ORDER BY ${KMeans.duckDot("e.embedding", "c.cs")} DESC,
          |        c.cid ASC) AS rn
-         |  FROM embeddings e, cl$ITERS c),
+         |  FROM embeddings e, cl${VecIndex.CITERS} c),
          |lists AS MATERIALIZED (
          |  SELECT vec_id, embedding, cid FROM assign WHERE rn = 1),
          |probes AS MATERIALIZED (
@@ -73,7 +71,7 @@ object Round10Ops {
          |    ROW_NUMBER() OVER (PARTITION BY q.qid
          |      ORDER BY ${KMeans.duckDot("q.qe", "c.cs")} DESC,
          |        c.cid ASC) AS prn
-         |  FROM qs q, cl$ITERS c),
+         |  FROM qs q, cl${VecIndex.CITERS} c),
          |sys AS MATERIALIZED (
          |  SELECT qid, vec_id, rnk FROM (
          |    SELECT q.qid, l.vec_id,
@@ -117,9 +115,8 @@ object Round10Ops {
          |  p.hits10, t.mrr6, t.mhits6
          |FROM perq2 p, tot t
          |ORDER BY p.qid""".stripMargin) { (s, dir) =>
-      ArrayDot.register(s)
       val e = Tables.table(s, dir, "embeddings")
-      val cb = KMeans.codebook(s, e, KMeans.servingK(e), ITERS)
+      val cb = KMeans.codebook(s, e, KMeans.servingK(e), VecIndex.CITERS)
       val lists = KMeans.assign(e, cb)
       val qs = e.filter(col("vec_id") % 125 === 0)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))

@@ -166,13 +166,13 @@ object Round11Final {
     Q(
       "q271_cluster_quality_eval",
       s"""WITH ${KMeans.kkCte()},
-         |${KMeans.oracleCtes(KMeans.duckK, Round7Ops.CITERS)},
+         |${KMeans.oracleCtes(KMeans.duckK, VecIndex.CITERS)},
          |asg AS MATERIALIZED (
          |  SELECT e.vec_id, e.embedding, c.cid, c.cs,
          |    ROW_NUMBER() OVER (PARTITION BY e.vec_id
          |      ORDER BY ${KMeans.duckDot("e.embedding", "c.cs")} DESC,
          |        c.cid ASC) AS rn
-         |  FROM embeddings e, cl${Round7Ops.CITERS} c),
+         |  FROM embeddings e, cl${VecIndex.CITERS} c),
          |mem AS MATERIALIZED (
          |  SELECT vec_id, cid,
          |    CAST(FLOOR(${KMeans.duckDot("embedding", "cs")}) AS BIGINT)
@@ -186,7 +186,7 @@ object Round11Final {
          |  SELECT a.cid,
          |    MAX(list_reduce(list_transform(range(len(a.cs)),
          |      i -> a.cs[i+1] * b.cs[i+1]), (x, y) -> x + y)) AS sep12
-         |  FROM cl${Round7Ops.CITERS} a JOIN cl${Round7Ops.CITERS} b
+         |  FROM cl${VecIndex.CITERS} a JOIN cl${VecIndex.CITERS} b
          |    ON a.cid <> b.cid
          |  GROUP BY a.cid)
          |SELECT c.cid, CAST(COALESCE(i.n, 0) AS BIGINT) AS n,
@@ -197,7 +197,7 @@ object Round11Final {
          |FROM cpair c LEFT JOIN intra i ON i.cid = c.cid
          |ORDER BY c.cid""".stripMargin) { (s, dir) =>
       val e = Tables.table(s, dir, "embeddings")
-      val cb = KMeans.codebook(s, e, KMeans.servingK(e), Round7Ops.CITERS)
+      val cb = KMeans.codebook(s, e, KMeans.servingK(e), VecIndex.CITERS)
       val mem = KMeans.assign(e, cb)
         .join(broadcast(cb), "cid")
         .select(col("cid"),

@@ -112,13 +112,13 @@ object Round12Final {
     Q(
       "q282_embedding_outlier_qc",
       s"""WITH ${KMeans.kkCte()},
-         |${KMeans.oracleCtes(KMeans.duckK, Round7Ops.CITERS)},
+         |${KMeans.oracleCtes(KMeans.duckK, VecIndex.CITERS)},
          |asg AS MATERIALIZED (
          |  SELECT e.vec_id, e.embedding, c.cid, c.cs,
          |    ROW_NUMBER() OVER (PARTITION BY e.vec_id
          |      ORDER BY ${KMeans.duckDot("e.embedding", "c.cs")} DESC,
          |        c.cid ASC) AS rn
-         |  FROM embeddings e, cl${Round7Ops.CITERS} c),
+         |  FROM embeddings e, cl${VecIndex.CITERS} c),
          |mem AS MATERIALIZED (
          |  SELECT vec_id, cid,
          |    CAST(FLOOR(${KMeans.duckDot("embedding", "cs")}) AS BIGINT)
@@ -139,12 +139,12 @@ object Round12Final {
          |  CAST(COALESCE(s.mu6, 0) AS BIGINT) AS mu6,
          |  CAST(COALESCE(o.n_out, 0) AS BIGINT) AS n_out,
          |  CAST(COALESCE(o.out_id_sum, 0) AS BIGINT) AS out_id_sum
-         |FROM (SELECT DISTINCT cid FROM cl${Round7Ops.CITERS}) c
+         |FROM (SELECT DISTINCT cid FROM cl${VecIndex.CITERS}) c
          |LEFT JOIN stats s ON s.cid = c.cid
          |LEFT JOIN outl o ON o.cid = c.cid
          |ORDER BY c.cid""".stripMargin) { (s, dir) =>
       val e = Tables.table(s, dir, "embeddings")
-      val cb = KMeans.codebook(s, e, KMeans.servingK(e), Round7Ops.CITERS)
+      val cb = KMeans.codebook(s, e, KMeans.servingK(e), VecIndex.CITERS)
       val mem = KMeans.assign(e, cb)
         .join(broadcast(cb), "cid")
         .select(col("vec_id"), col("cid"),

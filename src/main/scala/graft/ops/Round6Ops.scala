@@ -41,7 +41,6 @@ object Round6Ops {
   // CORPUS-DERIVED (KMeans.servingK = max(4, floor(sqrt(n))/2)), shared
   // with q74/q207/q217 so the coarse codebook stays the ONE train-once
   // artifact and per-cell occupancy stays ~2*sqrt(n) as the corpus grows
-  private val CITERS = 2 // coarse Lloyd iterations
   private val NPROBE = 2 // probed cells per query
   private val QN = 32 // q223 streaming query count
   private val M = 4 // PQ subspaces
@@ -268,13 +267,13 @@ object Round6Ops {
     Q(
       "q220_residual_ivf_pq",
       s"""WITH ${KMeans.kkCte()},
-         |${KMeans.oracleCtes(KMeans.duckK, CITERS)},
+         |${KMeans.oracleCtes(KMeans.duckK, VecIndex.CITERS)},
          |assign AS MATERIALIZED (
          |  SELECT e.vec_id, e.embedding, c.cid,
          |    ROW_NUMBER() OVER (PARTITION BY e.vec_id
          |      ORDER BY ${KMeans.duckDot("e.embedding", "c.cs")} DESC,
          |        c.cid ASC) AS rn
-         |  FROM embeddings e, cl$CITERS c),
+         |  FROM embeddings e, cl${VecIndex.CITERS} c),
          |resid AS MATERIALIZED (
          |  SELECT a.vec_id, a.cid,
          |    list_transform(range(len(a.embedding)), i ->
@@ -282,7 +281,7 @@ object Round6Ops {
          |        + 0.5) AS BIGINT) - c.cs[i+1] AS DOUBLE) / 1000000.0)
          |      AS embedding
          |  FROM (SELECT vec_id, embedding, cid FROM assign WHERE rn = 1) a
-         |  JOIN cl$CITERS c ON a.cid = c.cid),
+         |  JOIN cl${VecIndex.CITERS} c ON a.cid = c.cid),
          |$residChains,
          |$residEncs,
          |probes AS MATERIALIZED (SELECT cid FROM assign WHERE vec_id = 0
@@ -300,7 +299,7 @@ object Round6Ops {
          |    ${Pq.duckIntDot(Pq.duckScaled("ev.embedding"), "q.qs")}
          |      AS exact
          |  FROM cand v
-         |  JOIN cl$CITERS cc ON v.cid = cc.cid
+         |  JOIN cl${VecIndex.CITERS} cc ON v.cid = cc.cid
          |  JOIN embeddings ev ON ev.vec_id = v.vec_id
          |  $residEncJoins, qv q),
          |tope AS (
@@ -435,13 +434,13 @@ object Round6Ops {
     Q(
       "q222_ivf_probe_curve",
       s"""WITH ${KMeans.kkCte()},
-         |${KMeans.oracleCtes(KMeans.duckK, CITERS)},
+         |${KMeans.oracleCtes(KMeans.duckK, VecIndex.CITERS)},
          |assign AS MATERIALIZED (
          |  SELECT e.vec_id, c.cid,
          |    ROW_NUMBER() OVER (PARTITION BY e.vec_id
          |      ORDER BY ${KMeans.duckDot("e.embedding", "c.cs")} DESC,
          |        c.cid ASC) AS rn
-         |  FROM embeddings e, cl$CITERS c),
+         |  FROM embeddings e, cl${VecIndex.CITERS} c),
          |lists AS MATERIALIZED (SELECT vec_id, cid FROM assign WHERE rn = 1),
          |prank AS MATERIALIZED (SELECT cid, rn FROM assign WHERE vec_id = 0),
          |qv AS (SELECT ${Pq.duckScaled("embedding")} AS qs
@@ -477,7 +476,7 @@ object Round6Ops {
          |ORDER BY n.nprobe""".stripMargin) { (s, dir) =>
       val e = Tables.table(s, dir, "embeddings")
       val ck = KMeans.servingK(e)
-      val coarse = KMeans.codebook(s, e, ck, CITERS)
+      val coarse = KMeans.codebook(s, e, ck, VecIndex.CITERS)
       val lists = KMeans.assign(e, coarse)
         .select(col("vec_id"), col("cid"))
       // probe RANKING of all CK cells for the query (not a cut at one
@@ -537,13 +536,13 @@ object Round6Ops {
     Q(
       "q223_stream_vector_search",
       s"""WITH ${KMeans.kkCte()},
-         |${KMeans.oracleCtes(KMeans.duckK, CITERS)},
+         |${KMeans.oracleCtes(KMeans.duckK, VecIndex.CITERS)},
          |assign AS MATERIALIZED (
          |  SELECT e.vec_id, c.cid,
          |    ROW_NUMBER() OVER (PARTITION BY e.vec_id
          |      ORDER BY ${KMeans.duckDot("e.embedding", "c.cs")} DESC,
          |        c.cid ASC) AS rn
-         |  FROM embeddings e, cl$CITERS c),
+         |  FROM embeddings e, cl${VecIndex.CITERS} c),
          |lists AS MATERIALIZED (SELECT vec_id, cid FROM assign WHERE rn = 1),
          |qb AS MATERIALIZED (SELECT vec_id AS qid, embedding AS qe,
          |    ${Pq.duckScaled("embedding")} AS qs
@@ -554,7 +553,7 @@ object Round6Ops {
          |      ROW_NUMBER() OVER (PARTITION BY q.qid
          |        ORDER BY ${KMeans.duckDot("q.qe", "c.cs")} DESC,
          |          c.cid ASC) AS rn
-         |    FROM qb q, cl$CITERS c) WHERE rn <= $NPROBE),
+         |    FROM qb q, cl${VecIndex.CITERS} c) WHERE rn <= $NPROBE),
          |cand AS MATERIALIZED (
          |  SELECT p.qid, l.vec_id
          |  FROM lists l JOIN probes p ON l.cid = p.cid
@@ -574,7 +573,7 @@ object Round6Ops {
          |ORDER BY qid, rank""".stripMargin) { (s, dir) =>
       // ---- the INDEX, built once batch-side (train-once artifact) ----
       val e = Tables.table(s, dir, "embeddings")
-      val coarse = KMeans.codebook(s, e, KMeans.servingK(e), CITERS)
+      val coarse = KMeans.codebook(s, e, KMeans.servingK(e), VecIndex.CITERS)
       val lists = KMeans.assign(e, coarse)
         .select(col("vec_id"), col("cid"),
           expr(KMeans.scaleExpr("embedding")).as("sv"))
@@ -604,14 +603,14 @@ object Round6Ops {
     Q(
       "q224_persisted_index_serve",
       s"""WITH ${KMeans.kkCte()},
-         |${KMeans.oracleCtes(KMeans.duckK, CITERS)},
+         |${KMeans.oracleCtes(KMeans.duckK, VecIndex.CITERS)},
          |${Pq.pqChains},
          |assign AS MATERIALIZED (
          |  SELECT e.vec_id, e.embedding, c.cid,
          |    ROW_NUMBER() OVER (PARTITION BY e.vec_id
          |      ORDER BY ${KMeans.duckDot("e.embedding", "c.cs")} DESC,
          |        c.cid ASC) AS rn
-         |  FROM embeddings e, cl$CITERS c),
+         |  FROM embeddings e, cl${VecIndex.CITERS} c),
          |probes AS MATERIALIZED (SELECT cid FROM assign WHERE vec_id = 0
          |  AND rn <= $NPROBE),
          |cand AS MATERIALIZED (
@@ -668,7 +667,7 @@ object Round6Ops {
       // whose function registry is a snapshot from .start() — register
       // explicitly (like ingestBatch/servePqBatch/serveGraphBatch) rather
       // than rely on the snapshot having the kernels
-      graft.functions.VecDot.register(batch.sparkSession)
+      graft.GraftSession.setup(batch.sparkSession)
       val qb = batch.select(col("vec_id").as("qid"),
         col("embedding").as("qe"),
         expr(KMeans.scaleExpr("embedding")).as("qs"))

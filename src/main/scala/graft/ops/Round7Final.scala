@@ -37,7 +37,6 @@ import graft.Tables
   */
 object Round7Final {
 
-  private[ops] val CITERS = 2 // coarse Lloyd iterations (q74 geometry)
   private val SOFT = 2 // soft-assigned cells per vector (graph blocking)
   private val DEG = 6 // kNN-graph out-degree
   private[ops] val BEAM = 4 // beam width per hop
@@ -76,7 +75,7 @@ object Round7Final {
           .as("fp"))
       .head()
     (s"""{"n":${r.getLong(0)},"fp":${r.getLong(1)},"soft":$SOFT,""" +
-      s""""deg":$DEG,"citers":$CITERS$extra,"v":4}""", r.getLong(0))
+      s""""deg":$DEG,"citers":${VecIndex.CITERS}$extra,"v":4}""", r.getLong(0))
   }
 
   private def marker(e: DataFrame, extra: String): String =
@@ -265,7 +264,7 @@ object Round7Final {
       (ArtifactStore.root(s"graft_knngraph_${ArtifactStore.dirDigest(dir)}"),
         expect, srcbFor(n))
     } { (p, sb) =>
-      val cb = KMeans.codebook(s, e, KMeans.servingK(e), CITERS)
+      val cb = KMeans.codebook(s, e, KMeans.servingK(e), VecIndex.CITERS)
       val soft = pinned(s, softOf(e, centsRowOf(cb)))
       writeEdges(withSb(topDeg(pairsOf(soft, soft)), sb), s"$p/edges")
       // crank 0 IS the hard assignment — persisted cell-partitioned for
@@ -285,8 +284,6 @@ object Round7Final {
     */
   private[graft] def graphArtifacts(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    graft.functions.ArrayDot.register(s)
-      graft.functions.VecDot.register(s)
     val (path, srcb) = graphRoot(s, dir)
     val e = Tables.table(s, dir, "embeddings")
     (e.select(col("vec_id"), expr(scaledD).as("ivd")),
@@ -303,7 +300,7 @@ object Round7Final {
       s: SparkSession, dir: String, beam: Int, hops: Int): DataFrame = {
     val (ivc, edges, hard) = graphArtifacts(s, dir)
     val e = Tables.table(s, dir, "embeddings")
-    val cb = KMeans.codebook(s, e, KMeans.servingK(e), CITERS)
+    val cb = KMeans.codebook(s, e, KMeans.servingK(e), VecIndex.CITERS)
     beamOver(s, e, cb, ivc, edges, hard, beam, hops)
   }
 
@@ -439,8 +436,8 @@ object Round7Final {
       ivc: DataFrame, edges: DataFrame, hard: DataFrame, cb: DataFrame,
       batch: DataFrame): DataFrame = {
     val bs = batch.sparkSession
-    graft.functions.ArrayDot.register(bs)
-    graft.functions.VecDot.register(bs)
+    // a micro-batch runs on a cloned session (see Round6Ops.serveBatch)
+    graft.GraftSession.setup(bs)
     val qb = batch.select(col("vec_id").as("qid"),
       expr(scaledD).as("qiv"))
     val wp = Window.partitionBy(col("qid"))
@@ -493,7 +490,7 @@ object Round7Final {
       s: SparkSession, dir: String): DataFrame = {
     val (ivc, edges, hard) = graphArtifacts(s, dir)
     val e = Tables.table(s, dir, "embeddings")
-    val cb = KMeans.codebook(s, e, KMeans.servingK(e), CITERS)
+    val cb = KMeans.codebook(s, e, KMeans.servingK(e), VecIndex.CITERS)
     serveGraphFrame(ivc, edges, hard, cb, e.filter(col("vec_id") < QB))
   }
 
@@ -594,7 +591,7 @@ object Round7Final {
     */
   private[ops] def graphPrefixSql: String =
     s"""${KMeans.kkCte()},
-       |${KMeans.oracleCtes(KMeans.duckK, CITERS)},
+       |${KMeans.oracleCtes(KMeans.duckK, VecIndex.CITERS)},
        |ivc AS MATERIALIZED (
        |  SELECT vec_id, ${Pq.duckScaled("embedding")} AS iv
        |  FROM embeddings),
@@ -603,7 +600,7 @@ object Round7Final {
        |    ROW_NUMBER() OVER (PARTITION BY e.vec_id
        |      ORDER BY ${KMeans.duckDot("e.embedding", "c.cs")} DESC,
        |        c.cid ASC) AS rn
-       |  FROM embeddings e, cl$CITERS c),
+       |  FROM embeddings e, cl${VecIndex.CITERS} c),
        |soft AS MATERIALIZED (
        |  SELECT a.vec_id, a.cid, i.iv FROM assign a
        |  JOIN ivc i USING (vec_id) WHERE a.rn <= $SOFT),
@@ -665,7 +662,7 @@ object Round7Final {
     s"""base AS MATERIALIZED (
        |  SELECT * FROM embeddings WHERE vec_id % 10 < 8),
        |${KMeans.kkCte("base")},
-       |${KMeans.oracleCtesSlice(KMeans.duckK, CITERS, 0, 0, "", "base")},
+       |${KMeans.oracleCtesSlice(KMeans.duckK, VecIndex.CITERS, 0, 0, "", "base")},
        |ivc AS MATERIALIZED (
        |  SELECT vec_id, ${Pq.duckScaled("embedding")} AS iv
        |  FROM embeddings),
@@ -674,7 +671,7 @@ object Round7Final {
        |    ROW_NUMBER() OVER (PARTITION BY e.vec_id
        |      ORDER BY ${KMeans.duckDot("e.embedding", "c.cs")} DESC,
        |        c.cid ASC) AS rn
-       |  FROM embeddings e, cl$CITERS c),
+       |  FROM embeddings e, cl${VecIndex.CITERS} c),
        |soft AS MATERIALIZED (
        |  SELECT a.vec_id, a.cid, i.iv FROM assign a
        |  JOIN ivc i USING (vec_id) WHERE a.rn <= $SOFT),
@@ -872,7 +869,7 @@ object Round7Final {
       // once, sweep only the hop loop per width
       val (_, gEdges, gHard) = graphArtifacts(s, dir)
       val eC = Tables.table(s, dir, "embeddings")
-      val cbC = KMeans.codebook(s, eC, KMeans.servingK(eC), CITERS)
+      val cbC = KMeans.codebook(s, eC, KMeans.servingK(eC), VecIndex.CITERS)
       // pinned: beamFrom re-collects its entries once per width — an
       // unpinned frame would re-run the probe-window/join/groupBy plan
       // 3x per query (the batched q239 path pins for the same reason)
@@ -924,11 +921,9 @@ object Round7Final {
       // unchanged by definition of "touched"); serving then runs the
       // beam search FROM THE PERSISTED v2 FILES with the exact-top-10
       // referee.
-      graft.functions.ArrayDot.register(s)
-      graft.functions.VecDot.register(s)
       val e = Tables.table(s, dir, "embeddings")
       val base = e.filter(col("vec_id") % 10 < 8)
-      val cb = KMeans.codebook(s, base, KMeans.servingK(base), CITERS)
+      val cb = KMeans.codebook(s, base, KMeans.servingK(base), VecIndex.CITERS)
       // the soft-assignment frame feeds several consumers per call
       // (touched cells, recompute sources, both pair-join sides, hard
       // entries) — one eager checkpoint beats re-running the
@@ -1054,7 +1049,7 @@ object Round7Final {
       // rows per layer regardless of corpus size or cell occupancy.
       val (ivc, edges, _) = graphArtifacts(s, dir)
       val e = Tables.table(s, dir, "embeddings")
-      val cb = KMeans.codebook(s, e, KMeans.servingK(e), CITERS)
+      val cb = KMeans.codebook(s, e, KMeans.servingK(e), VecIndex.CITERS)
       val (p, srcbL1) =
         l1Graphs(dir, ArtifactStore.tableFileSig(dir, "embeddings")) {
           // the layer-1 graph additionally depends on the promotion
@@ -1182,7 +1177,7 @@ object Round7Final {
       val (ivc, edges, hard) = graphArtifacts(s, dir)
       val (root, srcbG) = graphRoot(s, dir)
       val e = Tables.table(s, dir, "embeddings")
-      val cb = KMeans.codebook(s, e, KMeans.servingK(e), CITERS)
+      val cb = KMeans.codebook(s, e, KMeans.servingK(e), VecIndex.CITERS)
       // the soft-assignment frame feeds several consumers per call
       // (touched cells, recompute sources, both pair-join sides, hard
       // entries) — one eager checkpoint beats re-running the
@@ -1279,7 +1274,7 @@ object Round7Final {
       // instead of 10, and batch throughput is the measured quantity.
       val (ivc, edges, hard) = graphArtifacts(s, dir)
       val e = Tables.table(s, dir, "embeddings")
-      val cb = KMeans.codebook(s, e, KMeans.servingK(e), CITERS)
+      val cb = KMeans.codebook(s, e, KMeans.servingK(e), VecIndex.CITERS)
       def pin(df: DataFrame): DataFrame = {
         val cp = df.localCheckpoint(true)
         s.createDataFrame(cp.rdd, cp.schema)
@@ -1363,7 +1358,7 @@ object Round7Final {
       // with overwrite: a replayed batch replaces, never appends.
       val (ivc, edges, hard) = graphArtifacts(s, dir)
       val e = Tables.table(s, dir, "embeddings")
-      val cb = KMeans.codebook(s, e, KMeans.servingK(e), CITERS)
+      val cb = KMeans.codebook(s, e, KMeans.servingK(e), VecIndex.CITERS)
       val qStream = Round6Ops.embStream(s, dir)
         .filter(col("vec_id") < QB)
       val out = ArtifactStore.scratchDir(

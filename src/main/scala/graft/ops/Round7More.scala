@@ -42,7 +42,6 @@ import graft.Tables
   */
 object Round7More {
 
-  private val CITERS = 2 // coarse Lloyd iterations (q74 geometry)
   private val NPROBE = 2 // unfiltered probe width
   private val LANG = "en" // q228's metadata predicate
 
@@ -60,14 +59,14 @@ object Round7More {
     */
   private def serveSqlPrefix: String =
     s"""${KMeans.kkCte()},
-       |${KMeans.oracleCtes(KMeans.duckK, CITERS)},
+       |${KMeans.oracleCtes(KMeans.duckK, VecIndex.CITERS)},
        |${Pq.pqChains},
        |assign AS MATERIALIZED (
        |  SELECT e.vec_id, e.embedding, c.cid,
        |    ROW_NUMBER() OVER (PARTITION BY e.vec_id
        |      ORDER BY ${KMeans.duckDot("e.embedding", "c.cs")} DESC,
        |        c.cid ASC) AS rn
-       |  FROM embeddings e, cl$CITERS c),
+       |  FROM embeddings e, cl${VecIndex.CITERS} c),
        |lists AS MATERIALIZED (SELECT vec_id, embedding, cid FROM assign
        |  WHERE rn = 1),
        |${Pq.pqCodeEncs("lists", "_a")},
@@ -130,7 +129,7 @@ object Round7More {
       coarse: DataFrame, cbRow: DataFrame, out: String)(
       batch: DataFrame, batchId: Long): Unit =
     if (!batch.isEmpty) {
-      graft.functions.VecDot.register(batch.sparkSession)
+      graft.GraftSession.setup(batch.sparkSession)
       Pq.pqEncode(KMeans.assign(batch, coarse), cbRow)
         .write.mode("overwrite").parquet(s"$out/b$batchId")
     }
@@ -144,14 +143,14 @@ object Round7More {
     Q(
       "q228_filtered_ann",
       s"""WITH ${KMeans.kkCte()},
-         |${KMeans.oracleCtes(KMeans.duckK, CITERS)},
+         |${KMeans.oracleCtes(KMeans.duckK, VecIndex.CITERS)},
          |${Pq.pqChains},
          |assign AS MATERIALIZED (
          |  SELECT e.vec_id, e.embedding, c.cid,
          |    ROW_NUMBER() OVER (PARTITION BY e.vec_id
          |      ORDER BY ${KMeans.duckDot("e.embedding", "c.cs")} DESC,
          |        c.cid ASC) AS rn
-         |  FROM embeddings e, cl$CITERS c),
+         |  FROM embeddings e, cl${VecIndex.CITERS} c),
          |lists AS MATERIALIZED (SELECT vec_id, embedding, cid FROM assign
          |  WHERE rn = 1),
          |${Pq.pqCodeEncs("lists", "_a")},

@@ -42,7 +42,6 @@ import graft.Tables
   */
 object Round7Ops {
 
-  private[ops] val CITERS = 2 // coarse Lloyd iterations (q74 geometry)
   private val NPROBE = 2 // probed cells per query
   private[ops] val QN = 32 // q226 query-batch size (q217's batch)
   private val P = 1000000007L // fingerprint modulus
@@ -83,14 +82,14 @@ object Round7Ops {
     s"""WITH base AS (
          |  SELECT * FROM embeddings WHERE vec_id % 10 < 8),
          |${KMeans.kkCte("base")},
-         |${KMeans.oracleCtesSlice(KMeans.duckK, CITERS, 0, 0, "", "base")},
+         |${KMeans.oracleCtesSlice(KMeans.duckK, VecIndex.CITERS, 0, 0, "", "base")},
          |${Pq.pqChainsFrom("base")},
          |assign AS MATERIALIZED (
          |  SELECT e.vec_id, e.embedding, c.cid,
          |    ROW_NUMBER() OVER (PARTITION BY e.vec_id
          |      ORDER BY ${KMeans.duckDot("e.embedding", "c.cs")} DESC,
          |        c.cid ASC) AS rn
-         |  FROM embeddings e, cl$CITERS c),
+         |  FROM embeddings e, cl${VecIndex.CITERS} c),
          |lists AS MATERIALIZED (SELECT vec_id, embedding, cid FROM assign
          |  WHERE rn = 1),
          |listsb AS MATERIALIZED (SELECT * FROM lists WHERE vec_id % 10 < 8),
@@ -226,13 +225,13 @@ object Round7Ops {
     */
   private[ops] val probeCurveCtes: String =
     s"""${KMeans.kkCte()},
-       |${KMeans.oracleCtes(KMeans.duckK, CITERS)},
+       |${KMeans.oracleCtes(KMeans.duckK, VecIndex.CITERS)},
        |assign AS MATERIALIZED (
        |  SELECT e.vec_id, c.cid,
        |    ROW_NUMBER() OVER (PARTITION BY e.vec_id
        |      ORDER BY ${KMeans.duckDot("e.embedding", "c.cs")} DESC,
        |        c.cid ASC) AS rn
-       |  FROM embeddings e, cl$CITERS c),
+       |  FROM embeddings e, cl${VecIndex.CITERS} c),
        |lists AS MATERIALIZED (SELECT vec_id, cid FROM assign WHERE rn = 1),
        |qb AS MATERIALIZED (SELECT vec_id AS qid, embedding AS qe,
        |    ${Pq.duckScaled("embedding")} AS qs
@@ -242,7 +241,7 @@ object Round7Ops {
        |    ROW_NUMBER() OVER (PARTITION BY q.qid
        |      ORDER BY ${KMeans.duckDot("q.qe", "c.cs")} DESC,
        |        c.cid ASC) AS rn
-       |  FROM qb q, cl$CITERS c),
+       |  FROM qb q, cl${VecIndex.CITERS} c),
        |levels AS (
        |  SELECT DISTINCT LEAST(CAST(1 AS BIGINT) << g, k) AS nprobe
        |  FROM (SELECT unnest(generate_series(0, 30)) AS g), kk),
@@ -293,7 +292,7 @@ object Round7Ops {
       : DataFrame = {
     val e = Tables.table(s, dir, "embeddings")
     val ck = KMeans.servingK(e)
-    val coarse = KMeans.codebook(s, e, ck, CITERS)
+    val coarse = KMeans.codebook(s, e, ck, VecIndex.CITERS)
     val lists = KMeans.assign(e, coarse)
       .select(col("vec_id"), col("cid"))
     val qb = e.filter(col("vec_id") < QN)
@@ -413,14 +412,14 @@ object Round7Ops {
     Q(
       "q227_index_delete_compact",
       s"""WITH ${KMeans.kkCte()},
-         |${KMeans.oracleCtes(KMeans.duckK, CITERS)},
+         |${KMeans.oracleCtes(KMeans.duckK, VecIndex.CITERS)},
          |${Pq.pqChains},
          |assign AS MATERIALIZED (
          |  SELECT e.vec_id, e.embedding, c.cid,
          |    ROW_NUMBER() OVER (PARTITION BY e.vec_id
          |      ORDER BY ${KMeans.duckDot("e.embedding", "c.cs")} DESC,
          |        c.cid ASC) AS rn
-         |  FROM embeddings e, cl$CITERS c),
+         |  FROM embeddings e, cl${VecIndex.CITERS} c),
          |lists AS MATERIALIZED (SELECT vec_id, embedding, cid FROM assign
          |  WHERE rn = 1),
          |surv AS MATERIALIZED (SELECT * FROM lists WHERE vec_id % 7 <> 3),

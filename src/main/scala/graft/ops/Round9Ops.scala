@@ -133,8 +133,8 @@ object Round9Ops {
       ivc: DataFrame, edges: DataFrame, hard: DataFrame, cb: DataFrame,
       codes: DataFrame, cbRow: DataFrame, batch: DataFrame): DataFrame = {
     val bs = batch.sparkSession
-    graft.functions.ArrayDot.register(bs)
-    graft.functions.VecDot.register(bs)
+    // a micro-batch runs on a cloned session (see Round6Ops.serveBatch)
+    graft.GraftSession.setup(bs)
     val qb = batch.select(col("vec_id").as("qid"),
       expr(Round7Final.scaledD).as("qiv"))
     val qsb = batch.select(col("vec_id").as("qid"),
@@ -183,7 +183,7 @@ object Round9Ops {
       s: SparkSession, dir: String): DataFrame = {
     val (ivc, edges, hard) = Round7Final.graphArtifacts(s, dir)
     val e = Tables.table(s, dir, "embeddings")
-    val cb = KMeans.codebook(s, e, KMeans.servingK(e), Round7Final.CITERS)
+    val cb = KMeans.codebook(s, e, KMeans.servingK(e), VecIndex.CITERS)
     val idx = VecIndex.artifacts(s, dir, "full", e)
     servePqFrame(ivc, edges, hard, cb, VecIndex.readCodes(s, idx),
       s.read.parquet(s"$idx/pq"),
@@ -384,7 +384,7 @@ object Round9Ops {
       val (ivc, edges, hard) = Round7Final.graphArtifacts(s, dir)
       val e = Tables.table(s, dir, "embeddings")
       val cb = KMeans.codebook(s, e, KMeans.servingK(e),
-        Round7Final.CITERS)
+        VecIndex.CITERS)
       val idx = VecIndex.artifacts(s, dir, "full", e)
       val codes = VecIndex.readCodes(s, idx)
       val cbRow = s.read.parquet(s"$idx/pq")
@@ -429,12 +429,10 @@ object Round9Ops {
          |  CAST(n_hit AS DOUBLE) / ${Round7Final.QB * 10} AS recall
          |FROM (SELECT * FROM me UNION ALL SELECT * FROM ma)
          |ORDER BY mode""".stripMargin) { (s, dir) =>
-      graft.functions.ArrayDot.register(s)
-      graft.functions.VecDot.register(s)
       val (ivc, edges, hard) = Round7Final.graphArtifacts(s, dir)
       val e = Tables.table(s, dir, "embeddings")
       val cb = KMeans.codebook(s, e, KMeans.servingK(e),
-        Round7Final.CITERS)
+        VecIndex.CITERS)
       val idx = VecIndex.artifacts(s, dir, "full", e)
       val codes = VecIndex.readCodes(s, idx)
       val cbRow = s.read.parquet(s"$idx/pq")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{SparkPlan, SortExec, UnaryExecNode}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.window.WindowExec
@@ -18,15 +17,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * also the plan whose shape survives to any scale. Data dir is sf0.001 —
   * plan SHAPE, not data, is under test.
   */
-class PlanAuditSpec extends AnyFunSuite {
+class PlanAuditSpec extends AnyFunSuite with GraftSpark {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.adaptive.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  override protected def sparkOverrides: Map[String, String] = Map(
+    "spark.sql.adaptive.enabled" -> "false")
 
   // data dir is overridable (and the suite self-skips when it's absent)
   // so `sbt test` stays green on a machine without the driver's testdata

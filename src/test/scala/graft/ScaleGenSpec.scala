@@ -11,14 +11,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * and the signed coordinate permutation must preserve within-replica
   * inner products exactly while killing cross-replica similarity.
   */
-class ScaleGenSpec extends AnyFunSuite {
+class ScaleGenSpec extends AnyFunSuite with GraftSpark {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "3")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  override protected def sparkOverrides: Map[String, String] = Map(
+    "spark.sql.shuffle.partitions" -> "3")
 
   private def docs: DataFrame = {
     import spark.implicits._

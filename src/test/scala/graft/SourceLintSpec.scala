@@ -44,6 +44,33 @@ class SourceLintSpec extends AnyFunSuite {
         "BehaviorOps) or use a keyed join if the side is not scalar")
   }
 
+  private val testDir = new java.io.File("src/test/scala/graft")
+
+  /** Files under `d` whose source contains any of `needles`. */
+  private def filesWith(d: java.io.File, needles: String*): Seq[String] =
+    scalaFiles(d).filter { f =>
+      val content = read(f)
+      needles.exists(content.contains)
+    }.map(_.getName)
+
+  test("SQL functions are registered only in GraftSession") {
+    assume(mainDir.isDirectory, s"source dir $mainDir absent — skipping")
+    val bad = filesWith(mainDir, "createOrReplaceTempFunction",
+      "udf.register").filterNot(_ == "GraftSession.scala")
+    assert(bad.isEmpty, s"function registration outside GraftSession: " +
+      bad.mkString(", ") + " — add the kernel to GraftSession's table")
+  }
+
+  test("specs open their session only through GraftSpark") {
+    assume(testDir.isDirectory, s"source dir $testDir absent — skipping")
+    // FuzzyResolveSpec needs a session built with the graft extensions
+    val allowed = Set("GraftSpark.scala", "FuzzyResolveSpec.scala")
+    val bad = filesWith(testDir, "SparkSession" + ".builder()")
+      .filterNot(allowed)
+    assert(bad.isEmpty, s"spec builds its own session: " +
+      bad.mkString(", ") + " — mix in graft.GraftSpark instead")
+  }
+
   test("no stubs or deferred work in src/main") {
     assume(mainDir.isDirectory, s"source dir $mainDir absent — skipping")
     val bad = for {

@@ -1,6 +1,6 @@
 package graft.exec
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSpark
 import org.scalatest.funsuite.AnyFunSuite
 import graft.meta._
 import graft.nl.MockLlmClient
@@ -10,13 +10,7 @@ import graft.nl.MockLlmClient
   * classic mistakes — must flow through context selection, repair, and
   * bounded execution to correct results.
   */
-class BridgeSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BridgeSpec extends AnyFunSuite with GraftSpark {
 
   def registerQueuedata(): Unit = {
     import spark.implicits._
@@ -86,6 +80,17 @@ class BridgeSpec extends AnyFunSuite {
     }
     assert(Bridge.ask(spark, "queuedata", "q", dict, llm) ==
       Left(Runner.ExitCodes.LlmError))
+  }
+
+  test("ask: a fatal error from the LLM client propagates") {
+    registerQueuedata()
+    val llm = new graft.nl.LlmClient {
+      def complete(s: String, u: String): String =
+        throw new InterruptedException("cancelled")
+    }
+    intercept[InterruptedException] {
+      Bridge.ask(spark, "queuedata", "q", dict, llm)
+    }
   }
 
   test("runner: bounded display detects truncation with limit+1 fetch") {

@@ -1,6 +1,6 @@
 package graft.exec
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSpark
 import org.scalatest.funsuite.AnyFunSuite
 import graft.meta._
 import graft.nl.MockLlmClient
@@ -20,13 +20,7 @@ import graft.nl.MockLlmClient
   * raw model output between ---RAW--- and ---SQL---, then the expected
   * cleaned SQL.
   */
-class MessyLlmFixtureSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class MessyLlmFixtureSpec extends AnyFunSuite with GraftSpark {
 
   private def registerQueuedata(): Unit = {
     import spark.implicits._

@@ -1,19 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSpark
 import org.scalatest.funsuite.AnyFunSuite
 
-class FunctionsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class FunctionsSpec extends AnyFunSuite with GraftSpark {
 
   test("ArrayDot equals the HOF fold bit-for-bit (codegen path)") {
     import spark.implicits._
-    ArrayDot.register(spark)
     val rnd = new scala.util.Random(7)
     val rows = Seq.fill(64)(
       (Array.fill(64)(rnd.nextFloat() - 0.5f),
@@ -28,7 +21,6 @@ class FunctionsSpec extends AnyFunSuite {
 
   test("ArrayDot interpreted eval matches codegen") {
     import spark.implicits._
-    ArrayDot.register(spark)
     spark.conf.set("spark.sql.codegen.wholeStage", "false")
     try {
       val df = Seq((Array(1.0f, 2.0f, 3.0f), Array(4.0f, 5.0f, 6.0f)))
@@ -40,14 +32,12 @@ class FunctionsSpec extends AnyFunSuite {
 
   test("ArrayDot mixed float/double arrays") {
     import spark.implicits._
-    ArrayDot.register(spark)
     val df = Seq((Array(1.0f, 2.0f), Array(0.5, 0.25))).toDF("a", "b")
     assert(df.selectExpr("array_dot(a, b)").head().getDouble(0) == 1.0)
   }
 
   test("ArrayDot rejects non-numeric-array inputs at analysis") {
     import spark.implicits._
-    ArrayDot.register(spark)
     val df = Seq((Array("x"), Array(1.0f))).toDF("a", "b")
     intercept[org.apache.spark.sql.AnalysisException] {
       df.selectExpr("array_dot(a, b)").collect()
@@ -56,7 +46,6 @@ class FunctionsSpec extends AnyFunSuite {
 
   test("WeightedAvg merges partials exactly across partitionings") {
     import spark.implicits._
-    WeightedAvg.register(spark)
     val rows = (1 to 1000).map(i => (i * 0.01 + 100.0, (i % 7 + 1).toDouble))
     val expected = {
       val num = rows.map { case (p, w) =>
@@ -73,7 +62,6 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("token_jaccard_sorted wrong arity raises a readable analysis error") {
-    TokenJaccardSorted.register(spark)
     val e = intercept[org.apache.spark.sql.AnalysisException] {
       spark.sql("SELECT token_jaccard_sorted(array('a'))").collect()
     }

@@ -1,19 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSpark
 import org.scalatest.funsuite.AnyFunSuite
 
-class HllAggSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class HllAggSpec extends AnyFunSuite with GraftSpark {
 
   test("estimate within 5% of exact across partitionings, and stable") {
     import spark.implicits._
-    HllAgg.register(spark)
     val n = 50000
     val df = (1 to n).map(i => i.toLong * 7919).toDF("v")
     var prev: Option[Long] = None
@@ -29,7 +22,6 @@ class HllAggSpec extends AnyFunSuite {
 
   test("small cardinalities are exact via linear counting") {
     import spark.implicits._
-    HllAgg.register(spark)
     val df = Seq("a", "b", "c", "a", "b", "a").toDF("s")
     assert(df.selectExpr("graft_hll(s)").head().getLong(0) == 3L)
   }

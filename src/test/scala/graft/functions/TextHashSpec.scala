@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,13 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * semantic changes. The HOF originals are inlined here verbatim so a
   * drift in either side fails the comparison.
   */
-class TextHashSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TextHashSpec extends AnyFunSuite with GraftSpark {
 
   private val M = 1000000007L
 
@@ -59,6 +53,18 @@ class TextHashSpec extends AnyFunSuite {
     corpus.toDF("text")
   }
 
+  // array<bigint> inputs with null elements (first, inner, last) and one
+  // all-null array: the kernels' null branches against the HOF shapes
+  private def nullThs = {
+    import spark.implicits._
+    def run(n: Int, nulls: Set[Int]): Seq[java.lang.Long] =
+      (0 until n).map(i =>
+        if (nulls(i)) null else java.lang.Long.valueOf(i * 7919L + 3))
+    Seq(run(24, Set(0)), run(24, Set(11)), run(24, Set(23)),
+      run(24, Set(2, 3, 17)), run(5, Set(1)), run(2, Set(0)),
+      run(24, (0 until 24).toSet)).toDF("th")
+  }
+
   test("token_hashes_pos == HOF positional token hashes") {
     val d = df.select(expr(hofPosTokenHashes).as("old"),
       TextHash.tokenHashesPos(col("text")).as("nw"))
@@ -73,7 +79,7 @@ class TextHashSpec extends AnyFunSuite {
 
   test("pos_grams == HOF gram fold for every guarded width") {
     for (w <- Seq(2, 3, 5, 20)) {
-      val d = df.select(expr(hofPosTokenHashes).as("th"))
+      val d = df.select(expr(hofPosTokenHashes).as("th")).union(nullThs)
         .filter(size(col("th")) >= w)
         .select(
           expr(s"transform(sequence(0, size(th) - $w), " +
@@ -92,7 +98,7 @@ class TextHashSpec extends AnyFunSuite {
   }
 
   test("minhash_sig == HOF 8-function MinHash") {
-    val d = df.select(expr(hofDistinctTokenHashes).as("th"))
+    val d = df.select(expr(hofDistinctTokenHashes).as("th")).union(nullThs)
       .select(expr(hofMinHash).as("old"),
         TextHash.minHashSig(col("th")).as("nw"))
     assert(d.filter("old IS DISTINCT FROM nw").count() === 0)

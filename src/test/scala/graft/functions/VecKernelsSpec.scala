@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,17 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * encode argmax and the ADC-from-codes sum) — cost optimizations,
   * never semantic changes. The HOF originals are inlined verbatim.
   */
-class VecKernelsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    VecDot.register(s)
-    s
-  }
+class VecKernelsSpec extends AnyFunSuite with GraftSpark {
 
   private val M = 4
   private val SUB = 16
@@ -53,13 +43,21 @@ class VecKernelsSpec extends AnyFunSuite {
     }.toDF("vec_id", "sv")
   }
 
-  private def cbsDf = {
+  // k = 7 is duplicate-distance tie bait. With `mismatch`, k = 8/9 carry
+  // a short/long cs whose distance is null, and in the last subspace EVERY
+  // cs mismatches, so its code falls to the all-null-d tiebreak (smallest
+  // cid); without it every cs is full length
+  private def cbsDf(mismatch: Boolean) = {
     import spark.implicits._
     val rnd = new scala.util.Random(13)
-    val entries = for (m <- 0 until M; k <- 0 until 8) yield
-      (m, k.toLong,
-        if (k == 7) Seq.fill(SUB)(0L) // duplicate-distance tie bait
-        else Seq.fill(SUB)((rnd.nextInt(1200001) - 600000).toLong))
+    def cs(n: Int) = Seq.fill(n)((rnd.nextInt(1200001) - 600000).toLong)
+    val entries = for (m <- 0 until M; k <- 0 until (if (mismatch) 10 else 8))
+      yield (m, k.toLong,
+        if (mismatch && m == M - 1) cs(SUB - 1 - 2 * (k % 2))
+        else if (k == 7) Seq.fill(SUB)(0L)
+        else if (k == 8) cs(SUB - 1)
+        else if (k == 9) cs(SUB + 1)
+        else cs(SUB))
     entries.toDF("sub", "cid", "cs")
       .agg(expr("array_sort(collect_list(struct(sub, cid, cs)))").as("cbs"))
   }
@@ -88,23 +86,26 @@ class VecKernelsSpec extends AnyFunSuite {
   }
 
   test("pq_encode == HOF per-subspace argmax chain (with ties)") {
-    val d = vecsDf.crossJoin(cbsDf)
+    val d = vecsDf.crossJoin(cbsDf(mismatch = true))
       .select((0 until M).map(m => expr(hofCode(m)).as(s"o$m")) ++
         (0 until M).map(m =>
           element_at(expr("pq_encode(sv, cbs)"), m + 1).as(s"n$m")): _*)
     val bad = (0 until M).map(m => s"o$m IS DISTINCT FROM n$m")
       .mkString(" OR ")
     assert(d.filter(bad).count() === 0)
+    assert(d.filter((0 until M).map(m => s"n$m IS NULL").mkString(" OR "))
+      .count() === 0)
   }
 
   test("adc_codes == HOF ADC sum over stored codes") {
     val cols = Seq(col("vec_id"), col("sv").as("qs"), col("cbs")) ++
       (0 until M).map(m =>
         element_at(expr("pq_encode(sv, cbs)"), m + 1).as(s"c$m"))
-    val coded = vecsDf.crossJoin(cbsDf).select(cols: _*)
+    val coded = vecsDf.crossJoin(cbsDf(mismatch = false)).select(cols: _*)
     val d = coded.select(expr(hofAdc).as("old"),
       expr(s"adc_codes(qs, cbs, array(${(0 until M).map(m => s"c$m")
         .mkString(", ")}))").as("nw"))
     assert(d.filter("old IS DISTINCT FROM nw").count() === 0)
+    assert(d.filter("nw IS NULL").count() === 0)
   }
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Independent in-JVM recomputation of the behavioral/graph gate queries
@@ -8,16 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * and triangle counts are rebuilt with plain Scala collections from the
   * raw rows and must match the distributed answers exactly.
   */
-class BehaviorOpsSpec extends AnyFunSuite {
+class BehaviorOpsSpec extends AnyFunSuite with GraftSpark {
 
   private val dir = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   // epoch-micros from whatever class the row carries (Timestamp for
   // TIMESTAMP columns, LocalDateTime for TIMESTAMP_NTZ) — the spec tests

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The distributed contraction path of Components must produce exactly the
@@ -8,14 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * a naive transitive closure in UnionFindSpec) — forced via a zero
   * single-task threshold.
   */
-class ComponentsSpec extends AnyFunSuite {
+class ComponentsSpec extends AnyFunSuite with GraftSpark {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "3")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  override protected def sparkOverrides: Map[String, String] = Map(
+    "spark.sql.shuffle.partitions" -> "3")
 
   private def run(edges: Seq[(Long, Long)], threshold: Long): Map[Long, Long] = {
     import spark.implicits._

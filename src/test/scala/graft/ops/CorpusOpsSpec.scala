@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** In-JVM recomputation of the corpus-prep gate queries on sf0.001:
@@ -9,16 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * bigram LM score is property-checked (log-probabilities are negative,
   * the worst-doc ranking is total).
   */
-class CorpusOpsSpec extends AnyFunSuite {
+class CorpusOpsSpec extends AnyFunSuite with GraftSpark {
 
   private val dir = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private lazy val docs: Array[(Long, String)] =
     graft.Tables.table(spark, dir, "documents")

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,16 +18,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - q216's total-variation summary row must equal half the sum of
   *    the per-bucket deltas it summarizes.
   */
-class MaintenanceOpsSpec extends AnyFunSuite {
+class MaintenanceOpsSpec extends AnyFunSuite with GraftSpark {
 
   private val dir = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def available: Boolean =
     new java.io.File(dir, "documents.parquet").exists()
@@ -36,7 +29,6 @@ class MaintenanceOpsSpec extends AnyFunSuite {
     graft.SparkEntry.queries(name)(spark, dir).collect()
 
   test("NfcNormalize: composes, idempotent, matches the JDK normalizer") {
-    graft.functions.NfcNormalize.register(spark)
     import spark.implicits._
     val samples = Seq(
       "e\u0301",            // e + combining acute -> precomposed

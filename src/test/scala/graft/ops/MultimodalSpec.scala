@@ -1,12 +1,13 @@
 package graft.ops
 
+import graft.GraftSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The real-codec invariant behind q61: encoding the closed-form test
   * pattern to PNG via javax.imageio and decoding it back must reproduce
   * the pattern's statistics exactly (PNG is lossless), for any id.
   */
-class MultimodalSpec extends AnyFunSuite {
+class MultimodalSpec extends AnyFunSuite with GraftSpark {
 
   private def expected(id: Long): (Long, Long, Long) = {
     var (sr, sg, sb) = (0L, 0L, 0L)
@@ -63,12 +64,6 @@ class MultimodalSpec extends AnyFunSuite {
     val dir = "/root/testdata/sf0.001"
     assume(new java.io.File(dir, "documents.parquet").exists(),
       s"$dir absent — skipping")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     graft.SparkEntry.queries("q61_multimodal_decode")(spark, dir).collect()
     val before = Multimodal.builtMedia.builds
     Multimodal.builtMedia.drop()

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-11 extra invariants: the KMV sketch's error bound and merge
@@ -8,16 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * layout (exactly one file per bucket — the claim the hash compare
   * cannot see).
   */
-class Round11ExtraSpec extends AnyFunSuite {
+class Round11ExtraSpec extends AnyFunSuite with GraftSpark {
 
   private val dir = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def available(d: String): Boolean =
     new java.io.File(d, "documents.parquet").exists()

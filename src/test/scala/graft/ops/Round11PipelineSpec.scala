@@ -1,22 +1,15 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-11 orchestration invariants: the epoch audit's conservation
   * and independence band, and the release manifest's artifact
   * discipline (atomic write, no residue, manifest == data).
   */
-class Round11PipelineSpec extends AnyFunSuite {
+class Round11PipelineSpec extends AnyFunSuite with GraftSpark {
 
   private val dir = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def available(d: String): Boolean =
     new java.io.File(d, "documents.parquet").exists()

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-12 run-operations invariants: the rebalance plan must conserve
@@ -9,16 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * must leak ZERO duplicated grams where the naive split provably
   * leaks; the incremental ExactSubstr must equal the batch rebuild.
   */
-class Round12FinalSpec extends AnyFunSuite {
+class Round12FinalSpec extends AnyFunSuite with GraftSpark {
 
   private val dir = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def available(d: String): Boolean =
     new java.io.File(d, "documents.parquet").exists()

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-12 serve/plan/audit invariants: the n-gram store must obey the
@@ -9,17 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * the pack boundary audit must equal an independent sequential
   * simulation of the concat-split stream.
   */
-class Round12ServeSpec extends AnyFunSuite {
+class Round12ServeSpec extends AnyFunSuite with GraftSpark {
 
   private val dir = "/root/testdata/sf0.001"
   private val M = 1000000007L
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def available(d: String): Boolean =
     new java.io.File(d, "documents.parquet").exists()

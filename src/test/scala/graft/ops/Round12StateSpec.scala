@@ -1,7 +1,7 @@
 package graft.ops
 
+import graft.GraftSpark
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-12 stateful-gate invariants: the streaming decontamination
@@ -10,16 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * exactly and agree with q265's b2r4 curve point when no bucket is
   * df-skipped.
   */
-class Round12StateSpec extends AnyFunSuite {
+class Round12StateSpec extends AnyFunSuite with GraftSpark {
 
   private val dir = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def available(d: String): Boolean =
     new java.io.File(d, "documents.parquet").exists()

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-14 gate invariants beyond the DuckDB hash compare: the markup
@@ -9,16 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * must agree row-for-row with a direct Scala replay of the role-schema
   * rules.
   */
-class Round14OpsSpec extends AnyFunSuite {
+class Round14OpsSpec extends AnyFunSuite with GraftSpark {
 
   private val dir = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def available: Boolean =
     new java.io.File(dir, "documents.parquet").exists()

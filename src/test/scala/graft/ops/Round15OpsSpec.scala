@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.GraftSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-15 invariants: the real-codec WAV loop behind q295 (encode →
@@ -9,16 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * fragmented codes — each built once per corpus, rebuilt only on a
   * stale marker), and the tempRoot retention sweep.
   */
-class Round15OpsSpec extends AnyFunSuite {
+class Round15OpsSpec extends AnyFunSuite with GraftSpark {
 
   private val dir = "/root/testdata/sf0.001"
-
-  private lazy val spark = org.apache.spark.sql.SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def available: Boolean =
     new java.io.File(dir, "documents.parquet").exists()

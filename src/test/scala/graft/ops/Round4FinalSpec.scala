@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** In-JVM recomputation of the round-4 closing gates on sf0.001 (the
@@ -9,16 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * match the distributed answers exactly — defense in depth beside the
   * DuckDB oracle, and a readable executable spec of the semantics.
   */
-class Round4FinalSpec extends AnyFunSuite {
+class Round4FinalSpec extends AnyFunSuite with GraftSpark {
 
   private val dir = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private lazy val docs: Array[(Long, String, String)] =
     graft.Tables.table(spark, dir, "documents")

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** In-JVM recomputation checks for the round-4 batch-2 corpus ops: the
@@ -9,14 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * oracle is the cross-engine gate; these pin the semantics locally on
   * literal inputs.
   */
-class Round4MoreSpec extends AnyFunSuite {
+class Round4MoreSpec extends AnyFunSuite with GraftSpark {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "3")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  override protected def sparkOverrides: Map[String, String] = Map(
+    "spark.sql.shuffle.partitions" -> "3")
 
   test("chunking: 8-token windows cover the token list exactly once") {
     // 20 tokens -> chunks of 8, 8, 4; reassembly round-trips the text

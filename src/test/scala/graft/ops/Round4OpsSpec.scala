@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** In-JVM recomputation checks for the round-4 corpus ops: the rendezvous
@@ -8,14 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * Scala reimplementations on small inputs (the DuckDB oracle is the
   * cross-engine gate; this pins the semantics locally).
   */
-class Round4OpsSpec extends AnyFunSuite {
+class Round4OpsSpec extends AnyFunSuite with GraftSpark {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "3")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  override protected def sparkOverrides: Map[String, String] = Map(
+    "spark.sql.shuffle.partitions" -> "3")
 
   private val P = 2147483647L
   private def weight(doc: Long, s: Long): Long = {

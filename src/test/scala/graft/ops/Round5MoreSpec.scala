@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Invariants for the round-5 second batch that the DuckDB oracle
@@ -13,16 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *    diagonal (re-read from the raw text in the JVM).
   *  - q207's probe must genuinely bound the candidate set.
   */
-class Round5MoreSpec extends AnyFunSuite {
+class Round5MoreSpec extends AnyFunSuite with GraftSpark {
 
   private val dir = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def available: Boolean =
     new java.io.File(dir, "documents.parquet").exists()

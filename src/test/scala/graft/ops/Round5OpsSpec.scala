@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-5 gate invariants that the DuckDB oracle alone cannot express:
@@ -9,16 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * commit-protocol state-equality proof (conflicted and replayed commits
   * change nothing), and the hash-path collision check.
   */
-class Round5OpsSpec extends AnyFunSuite {
+class Round5OpsSpec extends AnyFunSuite with GraftSpark {
 
   private val dir = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def available: Boolean =
     new java.io.File(dir, "embeddings.parquet").exists()

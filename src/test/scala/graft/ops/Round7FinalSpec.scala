@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-7 batch-3 invariants beyond the DuckDB hash compare: the graph
@@ -8,16 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * (the property that makes graph ANN a serving tier), and its referee
   * columns must agree with an independently computed brute force.
   */
-class Round7FinalSpec extends AnyFunSuite {
+class Round7FinalSpec extends AnyFunSuite with GraftSpark {
 
   private val dir = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def available: Boolean =
     new java.io.File(dir, "documents.parquet").exists()

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-7 gate invariants beyond the DuckDB hash compare: the ingest
@@ -10,16 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * full probe; the delete/compact gate must scrub every tombstoned doc
   * from both the served output and the compacted artifact.
   */
-class Round7OpsSpec extends AnyFunSuite {
+class Round7OpsSpec extends AnyFunSuite with GraftSpark {
 
   private val dir = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def available: Boolean =
     new java.io.File(dir, "documents.parquet").exists()

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pipeline-hygiene invariants beyond the DuckDB hash compare: the
@@ -8,16 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * really crosses the split and really clears the Jaccard threshold),
   * not just a stable hash.
   */
-class Round7PipelineSpec extends AnyFunSuite {
+class Round7PipelineSpec extends AnyFunSuite with GraftSpark {
 
   private val dir = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def available: Boolean =
     new java.io.File(dir, "documents.parquet").exists()

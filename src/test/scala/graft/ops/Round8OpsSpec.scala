@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-8 invariants beyond the DuckDB hash compare: the HNSW+PQ
@@ -8,16 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * an independently computed exact brute force on its referee columns,
   * and its result must be a well-formed top-10.
   */
-class Round8OpsSpec extends AnyFunSuite {
+class Round8OpsSpec extends AnyFunSuite with GraftSpark {
 
   private val dir = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def available: Boolean =
     new java.io.File(dir, "documents.parquet").exists()

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-9 invariants beyond the DuckDB hash compare: the rollback
@@ -11,17 +11,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * demonstrably train on an ACTIVE (non-saturated) sample at the hard
   * gate's scale factor.
   */
-class Round9OpsSpec extends AnyFunSuite {
+class Round9OpsSpec extends AnyFunSuite with GraftSpark {
 
   private val dir = "/root/testdata/sf0.001"
   private val dirHard = "/root/testdata/sf0.01"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def available(d: String): Boolean =
     new java.io.File(d, "documents.parquet").exists()

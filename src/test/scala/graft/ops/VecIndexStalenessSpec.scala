@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,16 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * index instead of serving stale — WITHOUT any test hook dropping the
   * in-JVM memo (that is exactly the path a long-lived session takes).
   */
-class VecIndexStalenessSpec extends AnyFunSuite {
+class VecIndexStalenessSpec extends AnyFunSuite with GraftSpark {
 
   private val src = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def available: Boolean =
     new java.io.File(src, "embeddings.parquet").exists()

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Property check of q193's winnowing guarantee (Schleimer et al.,
@@ -13,14 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * is asserted directly here on adversarial synthetic pairs, plus the
   * ~2/(w+1) density bound that keeps the fingerprint index small.
   */
-class WinnowingPropSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class WinnowingPropSpec extends AnyFunSuite with GraftSpark {
 
   /** doc_id -> set of selected fingerprint HASHES (position stripped). */
   private def fingerprints(docs: Seq[(Long, String)]): Map[Long, Set[Long]] = {

@@ -1,17 +1,14 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class AsOfJoinSpec extends AnyFunSuite {
+class AsOfJoinSpec extends AnyFunSuite with GraftSpark {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "3") // force partition seams
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  // force partition seams
+  override protected def sparkOverrides: Map[String, String] = Map(
+    "spark.sql.shuffle.partitions" -> "3")
 
   def ts(s: String) = java.sql.Timestamp.valueOf(s)
 

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSpark
 import org.apache.spark.sql.types.TimestampType
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,16 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * join (q115) end-to-end on sf0.001, plus asserts the load-time
   * normalization invariant they depend on.
   */
-class StreamingSmokeSpec extends AnyFunSuite {
+class StreamingSmokeSpec extends AnyFunSuite with GraftSpark {
 
   private val dir = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("events.ts loads as session-zoned TIMESTAMP whatever the parquet layout") {
     val events = graft.Tables.table(spark, dir, "events")
